@@ -308,35 +308,77 @@ def _family_min_step(coeffs: list[tuple[int, int]]):
 
 def _ensure_parallelism(df: DataFrame) -> DataFrame:
     """Repartition ONLY under-partitioned inputs up to the session's default
-    parallelism. Small files read as a handful of partitions, which would run
-    the (CPU-bound) signature folds on a handful of cores; a 100 TB table
-    already arrives with thousands of scan partitions and is left untouched.
+    parallelism, so the (CPU-bound) shingle/signature kernel runs on every
+    core; a 100 TB table already arrives with thousands of scan partitions
+    and is left untouched.
+
+    An input counts as under-partitioned when min(scan partitions, parquet
+    row groups) is below the target. A parquet byte-range split reads only
+    the row groups whose midpoint it holds, so a single-row-group file
+    scanned as 4 splits still feeds ONE task. Only the projected columns of
+    the caller (the id and the text) cross the added round-robin exchange.
 
     Probe order matters for cost: ``inputFiles()`` walks the logical plan's
     file indexes (no physical planning), so a wide scan — the 100 TB case —
-    short-circuits for free. Only plans that *might* be under-partitioned pay
-    the ``df.rdd`` DataFrame->RDD plan translation the partition count needs.
+    short-circuits for free. A plain parquet scan then reads footers until
+    ``target`` row groups are seen. Only plans still undecided pay the
+    ``df.rdd`` DataFrame->RDD plan translation the partition count needs.
     """
     spark = df.sparkSession
     target = spark.sparkContext.defaultParallelism
-    try:
-        # file count alone does not imply scan-partition count:
-        # FileSourceScan bin-packs small files (maxPartitionBytes padded by
-        # openCostInBytes per file), so N tiny files can read as far fewer
-        # than N partitions. Packing is bounded at maxPartitionBytes /
-        # openCostInBytes files per partition, so `count >= target * factor`
-        # guarantees >= target scan partitions for ANY file sizes; smaller
-        # counts fall through to the exact (costlier) partition probe.
-        max_part = int(spark.conf.get("spark.sql.files.maxPartitionBytes", "134217728").rstrip("b"))
-        open_cost = int(spark.conf.get("spark.sql.files.openCostInBytes", "4194304").rstrip("b"))
-        factor = max(1, max_part // max(open_cost, 1))
-        if len(df.inputFiles()) >= target * factor:
-            return df
-    except Exception:  # non-file source: fall through to the exact probe
-        pass
+    # file count alone does not imply scan-partition count: FileSourceScan
+    # bin-packs small files (maxPartitionBytes padded by openCostInBytes per
+    # file), so N tiny files can read as far fewer than N partitions. Packing
+    # is bounded at maxPartitionBytes / openCostInBytes files per partition,
+    # so `count >= target * factor` guarantees >= target scan partitions for
+    # ANY file sizes; smaller counts fall through to the exact probes.
+    conf = spark._jsparkSession.sessionState().conf()
+    factor = max(
+        1, conf.filesMaxPartitionBytes() // max(conf.filesOpenCostInBytes(), 1)
+    )
+    if len(df.inputFiles()) >= target * factor:
+        return df
+    relation = _parquet_relation(df)
+    if relation is not None and _parquet_row_groups(spark, relation, target) < target:
+        return df.repartition(target)
     if df.rdd.getNumPartitions() < target:
         return df.repartition(target)
     return df
+
+
+def _parquet_relation(df: DataFrame):
+    """The JVM HadoopFsRelation when ``df`` is a Project/Filter chain over one
+    parquet file scan (the only shape whose scan tasks are bounded by the
+    files' row groups), else None."""
+    node = df._jdf.queryExecution().optimizedPlan()
+    while node.nodeName() in ("Project", "Filter"):
+        node = node.children().head()
+    if node.nodeName() != "LogicalRelation":
+        return None
+    relation = node.relation()
+    if relation.getClass().getSimpleName() != "HadoopFsRelation":
+        return None
+    return relation if relation.fileFormat().toString() == "Parquet" else None
+
+
+def _parquet_row_groups(spark, relation, stop_at: int) -> int:
+    """Row groups in the relation's files, read from the parquet footers
+    through the session's Hadoop filesystem; stops once ``stop_at`` are seen."""
+    jvm = spark._jvm
+    hadoop_conf = spark._jsparkSession.sessionState().newHadoopConf()
+    files = relation.location().allFiles().iterator()
+    total = 0
+    while total < stop_at and files.hasNext():
+        reader = jvm.org.apache.parquet.hadoop.ParquetFileReader.open(
+            jvm.org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(
+                files.next(), hadoop_conf
+            )
+        )
+        try:
+            total += reader.getRowGroups().size()
+        finally:
+            reader.close()
+    return total
 
 
 def _minhash_signature(shingle_col: Column, n_hashes: int) -> Column:
@@ -453,7 +495,6 @@ def minhash_candidate_pairs(
     bands: int = 8,
     k: int = 5,
     max_bucket: int = 64,
-    ensure_parallel: bool = True,
 ) -> DataFrame:
     """LSH candidate pairs (id_a < id_b) sharing at least one band bucket.
 
@@ -462,13 +503,8 @@ def minhash_candidate_pairs(
     cheaper but collapses on homogeneous corpora: moderately-similar docs all
     collide and the candidate set explodes quadratically. The per-bucket cap
     (max_bucket) additionally bounds blowup on boilerplate-heavy buckets.
-
-    ``ensure_parallel=False``: the caller already repartitioned ``df`` (e.g.
-    ngram_jaccard_pairs shares ONE repartition between the LSH and
-    verification lineages, letting Catalyst reuse the exchange).
     """
-    if ensure_parallel:
-        df = _ensure_parallelism(df)
+    df = _ensure_parallelism(df)
     if _use_arrow_shingles():
         from gchq_data_quality_spark.functions.shingle_arrow import (
             band_bucket_structs,

@@ -263,7 +263,10 @@ def _batch_shingle_hashes(
     return out, counts
 
 
-_CHUNK_ROWS = 262_144  # bound the widened (rows x families/bits) temporaries
+# Bounds the widened (rows x families/bits) temporaries. Every core runs
+# its own Python worker, so per-worker peak memory is multiplied by the
+# core count, and _ensure_parallelism puts the kernel on every core.
+_CHUNK_ROWS = 65_536
 
 
 def _doc_chunks(counts: np.ndarray) -> Iterator[tuple[int, int, int, int]]:
@@ -451,11 +454,7 @@ def band_bucket_structs(sig: Column, n_hashes: int, bands: int) -> Column:
     dedup.py expression-cache note)."""
     from gchq_data_quality_spark.functions.dedup import _gateway_token
 
-    try:
-        name = sig._jc.toString()
-    except Exception:
-        name = None
-    if name == "sig":
+    if sig._jc.toString() == "sig":
         return _band_structs_cached(_gateway_token(), n_hashes, bands)
     return _band_structs_build(sig, n_hashes, bands)
 

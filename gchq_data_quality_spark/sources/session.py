@@ -46,6 +46,10 @@ def engine_conf() -> dict[str, str]:
         # 128 KB open cost give every leg 2+ task waves (8-core scaling leg
         # 12.1 -> 10.1 s; pair efficiency 0.72 -> 0.87) without changing the
         # 32-core headline scan (still 32 partitions; bytes-per-core binds).
+        # A parquet split reads only the row groups whose midpoint it holds,
+        # so 16 MB splits spread work only when row groups are <= 16 MB; a
+        # single-row-group file reads as ONE non-empty partition however
+        # many splits it gets (dedup._ensure_parallelism repartitions those).
         # SCALE NOTE: these are local-mode values — on a real cluster with
         # thousands of scan partitions, larger splits (256 MB - 1 GB) cut
         # task-scheduling and shuffle-block overhead (guide §2.2/§6); both

@@ -4,10 +4,15 @@ top-k must match a numpy oracle, IVF must agree with brute force on recall.
 
 from __future__ import annotations
 
+import os
+
 import numpy as np
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
+from gchq_data_quality_spark.functions import dedup as D
 from gchq_data_quality_spark.functions.dedup import (
     duplicate_groups,
     embedding_dedup_pairs,
@@ -653,3 +658,90 @@ def test_semantic_dedup_pairs_randomized_differential(
     }
     assert got == expected
     assert expected  # every config must actually plant qualifying pairs
+
+
+# ---------------------------------------------------------------------------
+# _ensure_parallelism: parquet row groups, not scan splits, bound the tasks
+# that read rows
+# ---------------------------------------------------------------------------
+
+
+def _write_corpus(path, row_group_size=None):
+    """300 seeded word documents plus 40 one-word-edited copies, written by
+    pyarrow (one row group unless ``row_group_size`` is given)."""
+    rng = np.random.default_rng(7)
+    vocab = [f"w{i}" for i in range(400)]
+    texts = [" ".join(rng.choice(vocab, size=40)) for _ in range(300)]
+    for i in range(40):
+        words = texts[i].split()
+        words[int(rng.integers(len(words)))] = "edited"
+        texts.append(" ".join(words))
+    table = pa.table({"doc_id": list(range(len(texts))), "text": texts})
+    pq.write_table(table, str(path), row_group_size=row_group_size)
+    return str(path)
+
+
+@pytest.fixture
+def split_reads(spark):
+    """Read small files as several byte-range splits; restores the session."""
+    key = "spark.sql.files.maxPartitionBytes"
+    old = spark.conf.get(key)
+
+    def read(path):
+        spark.conf.set(key, str(os.path.getsize(path) // 6))
+        return spark.read.parquet(path)
+
+    yield read
+    spark.conf.set(key, old)
+
+
+def _partitions_with_rows(df):
+    return df.select(F.spark_partition_id().alias("p")).distinct().count()
+
+
+def _plan(df):
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def test_ensure_parallelism_spreads_single_row_group_file(
+    spark, tmp_path, split_reads
+):
+    df = split_reads(_write_corpus(tmp_path / "one_rg.parquet"))
+    target = spark.sparkContext.defaultParallelism
+    assert df.rdd.getNumPartitions() >= 2
+    assert _partitions_with_rows(df) == 1  # only the midpoint's split reads
+
+    spread = D._ensure_parallelism(df)
+    assert "RoundRobinPartitioning" in _plan(spread)
+    assert _partitions_with_rows(spread) == target
+
+
+def test_ensure_parallelism_keeps_row_group_parallel_file(
+    spark, tmp_path, split_reads
+):
+    # 340 documents in row groups of 40: 9 row groups, >= defaultParallelism
+    df = split_reads(_write_corpus(tmp_path / "many_rg.parquet", row_group_size=40))
+    assert df.rdd.getNumPartitions() >= spark.sparkContext.defaultParallelism
+    assert "RoundRobinPartitioning" not in _plan(D._ensure_parallelism(df))
+
+
+def test_repartitioned_lsh_outputs_match_unrepartitioned(
+    spark, tmp_path, split_reads, monkeypatch
+):
+    df = split_reads(_write_corpus(tmp_path / "one_rg.parquet"))
+
+    def outputs():
+        pairs = D.ngram_jaccard_pairs(df, "text", "doc_id", threshold=0.7)
+        kept = D.minhash_dedup(df, "text", "doc_id", transitive=True, exact=True)
+        return (
+            sorted(tuple(r) for r in pairs.collect()),
+            sorted(r["doc_id"] for r in kept.collect()),
+        )
+
+    assert "RoundRobinPartitioning" in _plan(D._ensure_parallelism(df))
+    spread_pairs, spread_kept = outputs()
+    monkeypatch.setattr(D, "_ensure_parallelism", lambda frame: frame)
+    single_pairs, single_kept = outputs()
+    assert spread_pairs == single_pairs
+    assert spread_kept == single_kept
+    assert len(spread_pairs) >= 40 and len(spread_kept) == 300

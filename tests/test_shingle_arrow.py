@@ -114,7 +114,8 @@ def test_chunking_is_size_invariant():
     """The doc-aligned chunking of the vectorized folds (which bounds the
     widened temporaries for any Arrow batch size) must not change results."""
     rng = np.random.default_rng(0)
-    counts = rng.integers(1, 50, size=200).astype(np.int64)
+    # ~150k shingle rows, so the production chunk size splits them too
+    counts = rng.integers(1, 50, size=6000).astype(np.int64)
     values = rng.integers(-2**63, 2**63, size=int(counts.sum()), dtype=np.int64)
     coeffs = D._family_coeffs(16)
     a = np.array([c for c, _ in coeffs], dtype=np.uint64)
@@ -126,7 +127,7 @@ def test_chunking_is_size_invariant():
 
     old = sa._CHUNK_ROWS
     try:
-        for chunk in (1, 7, 64):
+        for chunk in (1, 7, 64, 65_536):
             sa._CHUNK_ROWS = chunk
             assert np.array_equal(_minhash_sig(values, counts, a, b), ref_sig)
             assert np.array_equal(_simhash(values, counts, 16, 16), ref_sim)
