@@ -849,9 +849,9 @@ def _q_lsh_verified_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     LSH recall (every true pair must surface as a candidate) AND the
     verifier's exact arithmetic — the signal VERDICT r2 said minhash lacked.
     Corpus pairs all sit at J >= 0.83 where 8x4 banding recalls >= 0.994.
-    r5: the verify runs IN the pair-expansion lambda over carried shingle
-    arrays (no verify joins, fold computed once — VERDICT r4 Next #3;
-    measured 3.53 -> 2.05 s at sf0.1)."""
+    The shingle kernel runs once, behind a localCheckpoint of (id, sh, sig);
+    only (band, bucket, id) rows shuffle, and each distinct candidate pair
+    joins its two shingle arrays back by id for the exact verify."""
     from gchq_data_quality_spark.functions.dedup import ngram_jaccard_pairs
 
     docs = _read(spark, sf_dir, "documents")

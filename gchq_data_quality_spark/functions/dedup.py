@@ -515,38 +515,21 @@ def minhash_candidate_pairs(
         banded = sf.select(
             "id",
             F.explode(band_bucket_structs(F.col("sig"), n_hashes, bands)).alias("bb"),
-        ).select(
-            "id", F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket")
         )
-        return _expand_bucket_pairs(
-            banded,
-            keys=["band", "bucket"],
-            member=F.col("id"),
-            make_pair=lambda x, y: F.struct(x.alias("id_a"), y.alias("id_b")),
-            max_bucket=max_bucket,
-        ).select("p.id_a", "p.id_b").distinct()
-    shingled = df.select(
-        F.col(id_col).alias("id"),
-        _hashed_shingles_expr(text_col, k).alias("sh"),
-    )
-    return _candidates_from_shingled(shingled, n_hashes, bands, max_bucket)
+    else:
+        banded = df.select(
+            F.col(id_col).alias("id"), _hashed_shingles_expr(text_col, k).alias("sh")
+        ).select("id", F.explode(_band_buckets_expr("sh", n_hashes, bands)).alias("bb"))
+    return _candidates_from_banded(banded, max_bucket)
 
 
-def _candidates_from_shingled(
-    shingled: DataFrame, n_hashes: int, bands: int, max_bucket: int
-) -> DataFrame:
-    """LSH candidate pairs from a pre-shingled (id, sh: array<long>) frame —
-    lets ngram_jaccard_pairs hash shingles ONCE and share the materialised
-    frame between the signature fold and the verification joins."""
-    banded = shingled.select(
-        "id",
-        F.explode(
-            _band_buckets_expr("sh", n_hashes, bands)
-        ).alias("bb"),
-    ).select("id", F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket"))
-
+def _candidates_from_banded(banded: DataFrame, max_bucket: int) -> DataFrame:
+    """Distinct LSH candidate pairs (id_a < id_b) from an (id, bb) frame of
+    exploded band-bucket structs: only (band, bucket, id) rows shuffle."""
     return _expand_bucket_pairs(
-        banded,
+        banded.select(
+            "id", F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket")
+        ),
         keys=["band", "bucket"],
         member=F.col("id"),
         make_pair=lambda x, y: F.struct(x.alias("id_a"), y.alias("id_b")),
@@ -606,8 +589,6 @@ def ngram_jaccard_pairs(
     n_hashes: int = 32,
     bands: int = 8,
     max_bucket: int = 64,
-    carry_shingles: bool = True,
-    materialize_shingles: bool = False,
 ) -> DataFrame:
     """Exact character-k-gram Jaccard over LSH candidates (verify stage).
 
@@ -618,31 +599,25 @@ def ngram_jaccard_pairs(
     strings: xxhash64 preserves distinctness (collision odds ~n^2/2^64 per
     doc), so |A∩B| and |A∪B| are identical to the string formulation while
     the per-candidate set intersection compares 8-byte longs instead of
-    hashing short strings — measured ~2x on the verify stage.
+    hashing short strings. ``sh`` is distinct per doc (kernel contract), so
+    one hash set per pair suffices: |A∪B| = |A| + |B| - |A∩B|.
 
-    ``carry_shingles=True`` (default): the hashed-shingle arrays ride INSIDE
-    the bucket structs and the exact Jaccard runs in the pair-expansion
-    lambda — the simhash engine's shape (VERDICT r4 Next #3). No verify
-    joins, and the shingle fold is pinned BEFORE a repartition barrier so it
-    computes exactly once (projection collapse would otherwise inline it
-    into both the carried column and the band fold). Measured 2.05 s vs the
-    join formulation's 3.53 s at sf0.1 (interleaved min-of-4; every sample
-    lower). The trade is shuffle weight: each row's shingle array crosses
-    the band shuffle ``bands`` times (~8 B x shingles x bands per doc) —
-    for corpora of BOOK-LENGTH documents where that dominates, pass
-    ``carry_shingles=False`` to fall back to the join verify, which moves
-    each shingle array across the wire ~3x total instead.
-
-    ``materialize_shingles`` (join path only): localCheckpoint the
-    (id, hashed-shingles) frame so shingling+hashing runs ONCE instead of
-    three times. Measured a NET LOSS on this sandbox twice (r3: 4.3 s vs
-    3.7 s lazy; r5 re-check: 3.8 s vs 3.5 s) — checkpoint serialisation
-    costs more than recomputing pure codegen'd CPU; the knob exists for
-    clusters where the trade flips (slow CPU, fast local disk).
+    Shape: the (id, sh, sig) kernel output is localCheckpoint-ed, so
+    CALLING this function runs one Spark job — the kernel, once (AQE runs
+    the map stage of _ensure_parallelism's repartition, when it adds one,
+    as a job of its own); the returned frame reads the checkpoint and
+    never re-runs the kernel. Candidates are built from
+    (band, bucket, id) rows only, and each distinct candidate pair is
+    verified once by joining its two ``sh`` arrays by id. Cost at scale:
+    the checkpoint holds 1x the hashed shingles (~8 B per distinct
+    shingle), and the verify joins move at most 2x of it — against the
+    ``bands`` (8) copies that crossed the band shuffle when the arrays
+    rode the bucket rows. On 4k perfbench documents no shuffle carries
+    ``sh`` (both verify joins broadcast), and minhash_dedup shuffles
+    2.7 MB instead of 140 MB.
     """
     base = _ensure_parallelism(df)
-    arrow = _use_arrow_shingles()
-    if arrow:
+    if _use_arrow_shingles():
         from gchq_data_quality_spark.functions.shingle_arrow import (
             band_bucket_structs,
             shingle_frame,
@@ -650,86 +625,24 @@ def ngram_jaccard_pairs(
 
         shingled = shingle_frame(
             base, text_col, id_col, k, want_sh=True, n_hashes=n_hashes
-        )
+        ).localCheckpoint()
         bands_col = band_bucket_structs(F.col("sig"), n_hashes, bands)
     else:
         shingled = base.select(
             F.col(id_col).alias("id"), _hashed_shingles_expr(text_col, k).alias("sh")
-        )
-    if carry_shingles:
-        if arrow:
-            # the MapInArrow node materialises (id, sh, sig): downstream
-            # references are plain column reads, no barrier repartition
-            # needed to stop projection collapse re-inlining the fold
-            banded = shingled.select(
-                "id", "sh", F.explode(bands_col).alias("bb")
-            ).select(
-                "id",
-                "sh",
-                F.col("bb.band").alias("band"),
-                F.col("bb.bucket").alias("bucket"),
-            )
-        else:
-            # barrier: pin the shingle fold pre-exchange so it computes once
-            target = df.sparkSession.sparkContext.defaultParallelism
-            shingled = shingled.repartition(target)
-            banded = shingled.select(
-                "id",
-                "sh",
-                F.explode(_band_buckets_expr("sh", n_hashes, bands)).alias("bb"),
-            ).select(
-                "id",
-                "sh",
-                F.col("bb.band").alias("band"),
-                F.col("bb.bucket").alias("bucket"),
-            )
-
-        def make_pair(x: Column, y: Column) -> Column:
-            inter = F.size(F.array_intersect(x["sh"], y["sh"]))
-            union = F.size(F.array_union(x["sh"], y["sh"]))
-            return F.struct(
-                x["id"].alias("id_a"),
-                y["id"].alias("id_b"),
-                (inter / union).alias("jaccard"),
-            )
-
-        return (
-            _expand_bucket_pairs(
-                banded,
-                keys=["band", "bucket"],
-                member=F.struct(F.col("id"), F.col("sh")),
-                make_pair=make_pair,
-                max_bucket=max_bucket,
-                keep=lambda p: p["jaccard"] >= threshold,
-            )
-            .select("p.id_a", "p.id_b", "p.jaccard")
-            .distinct()
-        )
-
-    if materialize_shingles:
-        shingled = shingled.localCheckpoint()
-    if arrow:
-        banded = shingled.select(
-            "id", F.explode(bands_col).alias("bb")
-        ).select(
-            "id", F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket")
-        )
-        candidates = _expand_bucket_pairs(
-            banded,
-            keys=["band", "bucket"],
-            member=F.col("id"),
-            make_pair=lambda x, y: F.struct(x.alias("id_a"), y.alias("id_b")),
-            max_bucket=max_bucket,
-        ).select("p.id_a", "p.id_b").distinct()
-    else:
-        candidates = _candidates_from_shingled(shingled, n_hashes, bands, max_bucket)
+        ).localCheckpoint()
+        bands_col = _band_buckets_expr("sh", n_hashes, bands)
+    candidates = _candidates_from_banded(
+        shingled.select("id", F.explode(bands_col).alias("bb")), max_bucket
+    )
     a = shingled.select(F.col("id").alias("id_a"), F.col("sh").alias("sh_a"))
     b = shingled.select(F.col("id").alias("id_b"), F.col("sh").alias("sh_b"))
-    joined = candidates.join(a, "id_a").join(b, "id_b")
     inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    union = F.size(F.array_union("sh_a", "sh_b"))
+    union = F.size("sh_a") + F.size("sh_b") - inter
     return (
-        joined.withColumn("jaccard", inter / union)
+        candidates.join(a, "id_a")
+        .join(b, "id_b")
+        .withColumn("jaccard", inter / union)
         .filter(F.col("jaccard") >= threshold)
         .select("id_a", "id_b", "jaccard")
     )
@@ -770,11 +683,10 @@ def minhash_dedup(
     hybrid dispatcher makes this cheap for typical near-dup graphs (small
     graphs collect into a union-find; huge ones run the distributed
     algorithms), so pick it whenever chains deeper than ``max_iters`` hops
-    are plausible.
+    are plausible. The pairs are not checkpointed here: the dispatcher
+    checkpoints its own canonical edge list.
     """
     pairs = ngram_jaccard_pairs(df, text_col, id_col, threshold, **kwargs)
-    if transitive:
-        pairs = pairs.localCheckpoint()
     if not transitive:
         # representative = min neighbour id (one hop)
         losers = pairs.select(F.col("id_b").alias(id_col)).distinct()
@@ -791,6 +703,7 @@ def minhash_dedup(
         )
         return df.join(losers, id_col, "left_anti")
 
+    pairs = pairs.localCheckpoint()
     # symmetric edge list over only the ids that appear in some pair
     edges = pairs.select(
         F.col("id_a").alias("src"), F.col("id_b").alias("dst")

@@ -187,7 +187,8 @@ def connected_components(
     with ``label`` = the smallest id in the node's component.
 
     Hybrid execution: the edge list is materialised once (every strategy
-    needs that anyway) and COUNTED; at or below ``small_graph_edges`` the
+    needs that anyway) and its first ``small_graph_edges + 1`` rows are
+    collected; at or below ``small_graph_edges`` edges the
     components are solved by a driver-side union-find over the collected
     edges — a bounded collect (the threshold caps driver memory at a few
     MB) that replaces 10-20 tiny shuffle rounds with one pass, the right
@@ -224,9 +225,9 @@ def connected_components(
     # materialise the CANONICAL edge list ONCE: every strategy iterates
     # over it, and without the checkpoint each round would re-run the whole
     # upstream pipeline that produced the pairs (e.g. LSH + exact
-    # verification — measured 3x the total query cost at sf0.1). The
-    # count it yields is free (the data is local) and drives the
-    # small-graph dispatch.
+    # verification — measured 3x the total query cost at sf0.1). One
+    # bounded collect of small_graph_edges + 1 rows (local data) decides
+    # the small-graph dispatch and, when small, IS the driver's edge list.
     canon = (
         pairs.select(
             F.greatest(F.col(id_a), F.col(id_b)).alias("hi"),
@@ -236,8 +237,9 @@ def connected_components(
         .distinct()
         .localCheckpoint()
     )
-    if canon.count() <= small_graph_edges:
-        return _connected_components_driver(canon)
+    head = canon.limit(small_graph_edges + 1).collect()
+    if len(head) <= small_graph_edges:
+        return _connected_components_driver(canon, head)
     if method == "star":
         return _connected_components_star(canon, max_iters, strict)
     edges = (
@@ -281,11 +283,11 @@ def connected_components(
     return labels
 
 
-def _connected_components_driver(canon: DataFrame) -> DataFrame:
-    """Union-find over a collected canonical edge list — the small-graph
-    fast path (caller enforces the bound). Path-halving find + min-root
-    union keeps the label = component minimum directly."""
-    rows = canon.collect()
+def _connected_components_driver(canon: DataFrame, rows: list) -> DataFrame:
+    """Union-find over the collected canonical edge list ``rows`` (of
+    ``canon``) — the small-graph fast path (caller enforces the bound).
+    Path-halving find + min-root union keeps the label = component minimum
+    directly."""
     parent: dict = {}
 
     def find(x):

@@ -192,20 +192,23 @@ def test_top_ngrams_is_take_ordered_not_full_sort(spark):
     assert plan.count("HashAggregate") >= 2  # partial + final
 
 
-def test_lsh_verified_pairs_no_cartesian_and_broadcast_free_big_side(spark):
-    """The LSH->verify pipeline (carry-shingles shape, r5): the shingle
-    arrays ride the bucket structs and the exact Jaccard runs in the pair-
-    expansion lambda, so the plan must contain NO join operator at all —
-    and the shingle fold must be pinned below a repartition exchange so it
-    computes once (measured 2.05 s vs the join verify's 3.53 s at sf0.1)."""
+def test_lsh_verified_pairs_no_cartesian_and_verifies_by_id_join(spark):
+    """The LSH->verify pipeline: the kernel output is checkpointed when the
+    query is built (no MapInArrow left in the plan), candidates come from
+    one bucket explode and one pair expansion over (band, bucket, id) rows,
+    and the exact Jaccard runs after two equi-joins on id that bring each
+    candidate's two shingle arrays together — never a cartesian product."""
+    import re
+
     import __spark_entry__ as entry_mod
 
     df = entry_mod.queries()["lsh_verified_pairs"](spark, SF)
     plan = _plan(df)
-    assert "Join" not in plan, plan
-    assert "CartesianProduct" not in plan
-    # one bucket explode + one pair expansion, nothing recomputed
-    assert plan.count("Generate") == 2, plan
+    assert "CartesianProduct" not in plan and "NestedLoopJoin" not in plan, plan
+    assert "MapInArrow" not in plan, plan
+    assert plan.count("Generate") == 2, plan  # bucket explode + pair expansion
+    joins = re.findall(r"(?:HashJoin|SortMergeJoin) \[(id_[ab])#", plan)
+    assert sorted(joins) == ["id_a", "id_b"], plan
 
 
 def test_decontamination_query_broadcasts_probe_grams(spark):
@@ -273,6 +276,53 @@ def test_lsh_pair_generation_runs_fold_once(spark):
         assert plan.count("Generate") == 2, plan  # bucket explode + pair explode
         # shuffles: repartition (parallelism), (band/rot, bucket), distinct
         assert plan.count("Exchange hashpartitioning") == 2, plan
+
+
+def _shuffle_outputs(df) -> list[list[str]]:
+    """Output column names of every shuffle exchange in the executed plan
+    (AQE's final plan once ``df`` has run)."""
+    found: list[list[str]] = []
+
+    def walk(node):
+        name = node.getClass().getSimpleName()
+        if name == "AdaptiveSparkPlanExec":
+            return walk(node.executedPlan())
+        if name.endswith("QueryStageExec"):
+            return walk(node.plan())
+        if name == "ReusedExchangeExec":
+            return walk(node.child())
+        if name == "ShuffleExchangeExec":
+            out = node.output()
+            found.append([out.apply(i).name() for i in range(out.size())])
+        children = node.children()
+        for i in range(children.size()):
+            walk(children.apply(i))
+
+    walk(df._jdf.queryExecution().executedPlan())
+    return found
+
+
+def test_lsh_verify_runs_kernel_once_and_shuffles_ids_only(spark):
+    """ngram_jaccard_pairs checkpoints the (id, sh, sig) kernel output when
+    called: the returned plans read the checkpoint (no MapInArrow, so the
+    kernel cannot run again), and no shuffle carries a shingle array — the
+    band shuffle moves (band, bucket, id) rows, and the verify joins the
+    arrays back by id."""
+    from gchq_data_quality_spark.functions.dedup import (
+        minhash_dedup,
+        ngram_jaccard_pairs,
+    )
+
+    docs = spark.read.parquet(f"{SF}/documents.parquet")
+    pairs = ngram_jaccard_pairs(docs, "text", "doc_id", threshold=0.7)
+    kept = minhash_dedup(docs, "text", "doc_id", transitive=True, exact=True)
+    for df in (pairs, kept):
+        assert "MapInArrow" not in _plan(df), _plan(df)
+    assert pairs.count() > 0
+    shuffles = _shuffle_outputs(pairs)
+    assert any(set(cols) == {"id", "band", "bucket"} for cols in shuffles), shuffles
+    for cols in shuffles:
+        assert not {"sh", "sh_a", "sh_b"} & set(cols), shuffles
 
 
 def test_anti_join_query_shape(spark):

@@ -500,6 +500,42 @@ def test_star_components_random_graphs_match_union_find(spark):
         assert star == expected, f"trial {trial}"
 
 
+def test_connected_components_small_graph_boundary(spark, monkeypatch):
+    """A graph with exactly ``small_graph_edges`` canonical edges takes the
+    driver union-find; one edge more takes the distributed path. Both must
+    label like the distributed path forced with ``small_graph_edges=0``."""
+    from gchq_data_quality_spark.functions import relational as R
+
+    rng = random.Random(3)
+    edges: set = set()
+    while len(edges) < 12:
+        a, b = rng.sample(range(30), 2)
+        edges.add((min(a, b), max(a, b)))
+    # reversed duplicates and a self-loop collapse in the canonical list
+    rows = sorted(edges) + [(b, a) for a, b in sorted(edges)[:3]] + [(5, 5)]
+    pairs = spark.createDataFrame(rows, "id_a long, id_b long")
+
+    def labels(small):
+        return sorted(
+            tuple(r)
+            for r in connected_components(pairs, small_graph_edges=small).collect()
+        )
+
+    expected = labels(0)
+    driver_calls: list = []
+    real = R._connected_components_driver
+
+    def spy(canon, collected):
+        driver_calls.append(len(collected))
+        return real(canon, collected)
+
+    monkeypatch.setattr(R, "_connected_components_driver", spy)
+    assert labels(12) == expected
+    assert driver_calls == [12]
+    assert labels(11) == expected
+    assert driver_calls == [12]
+
+
 def test_dedup_cluster_sizes_unchanged_under_star_flag(spark):
     """The driver query's oracle-attested result must be method-invariant:
     swapping the component algorithm changes the plan, never the labels."""

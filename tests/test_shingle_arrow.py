@@ -10,12 +10,17 @@ decision."""
 
 from __future__ import annotations
 
+from pathlib import Path
+
 import numpy as np
+import pyarrow as pa
 import pytest
 from pyspark.sql import functions as F
 
+from __spark_entry__ import SF_DEFAULT
 from gchq_data_quality_spark.functions import dedup as D
 from gchq_data_quality_spark.functions.shingle_arrow import (
+    _batch_shingle_hashes,
     _doc_chunks,
     _minhash_sig,
     _simhash,
@@ -38,6 +43,11 @@ EDGE_DOCS = [
     (12, "Mixed ascii then 中文 then ascii again padding padding"),
     (13, "İstanbul DİYARBAKIR ınce"),
     (14, "TAB\tSEP\tVALS\t1\t2\t3"),
+    (15, "ab"),
+    (16, "x" * 4),
+    (17, "x" * 5),
+    (18, "  leading and trailing  "),
+    (19, "ascii only but quite long " * 100),
 ]
 
 
@@ -78,15 +88,30 @@ def test_edge_corpus_k3_sampled(spark, edge):
     _compare(edge, 3, 8, 192)
 
 
+def test_edge_corpus_k3_exact(spark, edge):
+    _compare(edge, 3, 8, None)
+
+
 def test_edge_corpus_k3_tiny_sample(spark, edge):
     # sample smaller than most docs: exercises the bottom-k sort selection
     _compare(edge, 3, 8, 2)
 
 
+@pytest.mark.parametrize("k", [7, 8])
+def test_edge_corpus_wide_windows(spark, edge, k):
+    # at k=8 the 64 window bits leave no room for a doc index, so the
+    # distinct step takes the three-key lexsort instead of the packed key
+    _compare(edge, k, 8, 192)
+
+
 def test_testdata_corpus(spark):
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    _compare(docs, 5, 32, None)
-    _compare(docs, 3, 8, 192)
+    for sf in ("sf0.001", "sf0.01"):
+        path = Path(SF_DEFAULT).parent / sf / "documents.parquet"
+        docs = spark.read.parquet(str(path))
+        _compare(docs, 5, 32, None)
+        _compare(docs, 3, 8, 192)
+        # 500 docs in one batch: 8*7 + 9 doc bits > 64, the lexsort branch
+        _compare(docs, 7, 8, None)
 
 
 def test_pair_queries_identical_to_native(spark, monkeypatch):
@@ -127,7 +152,7 @@ def test_chunking_is_size_invariant():
 
     old = sa._CHUNK_ROWS
     try:
-        for chunk in (1, 7, 64, 65_536):
+        for chunk in (1, 7, 64, old):
             sa._CHUNK_ROWS = chunk
             assert np.array_equal(_minhash_sig(values, counts, a, b), ref_sig)
             assert np.array_equal(_simhash(values, counts, 16, 16), ref_sim)
@@ -136,3 +161,30 @@ def test_chunking_is_size_invariant():
             )
     finally:
         sa._CHUNK_ROWS = old
+
+
+def test_batch_hashes_invariant_to_batch_split():
+    """One Arrow batch of 20k docs must hash exactly like the same docs in
+    100-doc slices. At k=7 the whole batch needs 15 doc-index bits, so it
+    takes the lexsort branch while each slice packs its key into one
+    uint64; slicing also exercises the array offset. NULL, short and
+    non-ASCII docs take the scalar path and are interleaved back."""
+    rng = np.random.default_rng(1)
+    words = ["alpha", "beta", "gamma", "delta", "eps", "zeta", "eta"]
+    docs: list[str | None] = [
+        " ".join(rng.choice(words, size=int(rng.integers(1, 12))))
+        for _ in range(20_000)
+    ]
+    for i in range(0, len(docs), 997):
+        docs[i] = None
+    for i in range(5, len(docs), 1009):
+        docs[i] = "straße " + str(docs[i - 1])
+    col = pa.array(docs, pa.string())
+    for k in (5, 7):
+        values, counts = _batch_shingle_hashes(col, k)
+        parts = [
+            _batch_shingle_hashes(col.slice(lo, 100), k)
+            for lo in range(0, len(docs), 100)
+        ]
+        assert np.array_equal(counts, np.concatenate([c for _, c in parts]))
+        assert np.array_equal(values, np.concatenate([v for v, _ in parts]))
