@@ -4,8 +4,11 @@ The reference ships a ~300-case YAML corpus (tests/data/*.yaml) that IS the
 executable specification of rule semantics (reference tests/README.md:1-19).
 We do not copy those files; when the reference checkout is present we load
 them directly and run every case through THIS engine — a differential test of
-our compiled-expression implementation against the reference's labels. Our
-own handwritten cases in tests/data/ cover the same semantics standalone.
+our compiled-expression implementation against the reference's labels.
+Without it, ``load_cases`` falls back to this repo's own hand-derived cases in
+tests/data/ (same case shape, FIXTURES.md F3). Each of those files says in its
+header where its expected values come from. A name found in neither place
+gives no cases, so its parametrized tests collect as an empty parameter set.
 """
 
 from __future__ import annotations
@@ -33,7 +36,8 @@ def spark():
 
 
 def load_cases(name: str) -> list[dict]:
-    """Load a YAML case file from the reference corpus, else local tests/data."""
+    """Load ``<name>.yaml`` from the reference corpus when present, else from
+    the hand-derived tests/data/ cases; ``[]`` when neither has it."""
     for base in (REFERENCE_DATA, LOCAL_DATA):
         path = base / f"{name}.yaml"
         if path.exists():

@@ -1,9 +1,12 @@
-"""Nested flatten planner vs the reference's golden outputs.
+"""Nested flatten planner vs golden outputs.
 
 The fixture reproduces the reference's pet-shop nested table
-(tests/spark/conftest.py:289-411) and the expected rows come from the golden
-cases in tests/data/flatten_spark.yaml:44-99 (row fan-out under [*], row
-preservation for empty arrays, [] first-non-null selection).
+(tests/spark/conftest.py:289-411). The golden cases come from
+``load_cases``: the reference's tests/data/flatten_spark.yaml and
+create_spark_dataframe.yaml when that checkout is present, else this repo's
+hand-derived tests/data/ files of the same names, whose expected rows are
+counted from this fixture (row fan-out under [*], row preservation for empty
+arrays, [] first-non-null selection).
 """
 
 from __future__ import annotations
@@ -20,7 +23,7 @@ from gchq_data_quality_spark.plans.flatten import (
     validate_path,
 )
 
-from .conftest import load_cases
+from .conftest import case_ids, load_cases
 
 
 @pytest.fixture(scope="module")
@@ -91,7 +94,7 @@ def _rows_multiset(df, columns):
 @pytest.mark.parametrize(
     "case",
     load_cases("flatten_spark"),
-    ids=lambda c: c["description"][:60],
+    ids=case_ids(load_cases("flatten_spark")),
 )
 def test_flatten_golden(spark, nested_df, case):
     flatten_cols = case["inputs"]["flatten_cols"]
@@ -165,11 +168,11 @@ def test_flatten_spark_reference_signature(spark):
 @pytest.mark.parametrize(
     "case",
     load_cases("create_spark_dataframe"),
-    ids=lambda c: c["description"][:60],
+    ids=case_ids(load_cases("create_spark_dataframe")),
 )
 def test_create_spark_dataframe_golden(spark, nested_df, case):
-    """Reference golden cases for single-field extraction (tests/data/
-    create_spark_dataframe.yaml, driven by spark/test_dataframe_operations
+    """Golden cases for single-field extraction (create_spark_dataframe.yaml;
+    the reference drives its copy from spark/test_dataframe_operations
     .py:58-77): flatten ONE path with keep_cols -> exact output column set
     and post-explosion row count. Our flatten(df, [field], keep_cols) is
     the same contract as the reference's _create_spark_dataframe."""

@@ -29,7 +29,13 @@ from gchq_data_quality_spark.plans.expressions import (
 )
 from gchq_data_quality_spark.plans.flatten import safe_name
 
-from .conftest import case_ids, load_cases, spark_df_from_dict
+from .conftest import (
+    LOCAL_DATA,
+    REFERENCE_DATA,
+    case_ids,
+    load_cases,
+    spark_df_from_dict,
+)
 
 IDX = "__idx"
 
@@ -306,12 +312,15 @@ def test_aggregate_records_failed_samples_case(case):
 
 
 def test_rule_evaluate_corpus_case_spark(spark):
-    """A reference corpus case exercised through rule.evaluate() instead of
-    the engine entry point."""
+    """A completeness corpus case exercised through rule.evaluate() instead
+    of the engine entry point."""
     from .conftest import assert_result_matches
 
     cases = load_cases("completeness")
-    assert cases, "reference corpus must be present"
+    assert cases, (
+        f"completeness.yaml must be present in {REFERENCE_DATA} (reference "
+        f"corpus) or {LOCAL_DATA} (hand-derived cases)"
+    )
     case = cases[0]
     inputs = dict(case["inputs"])
     df = spark_df_from_dict(spark, inputs.pop("df"))
