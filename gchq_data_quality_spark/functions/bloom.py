@@ -43,6 +43,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from gchq_data_quality_spark.functions.dedup import _splitmix64
+from gchq_data_quality_spark.session_memo import SessionMemo, unpersist
 
 _P = (1 << 61) - 1  # Mersenne prime modulus for the position family
 _MAGIC = b"GQBL"
@@ -233,32 +234,11 @@ def _probe_bloom(digest: str, payload) -> PyBloom:
     return bloom
 
 
-_BCAST_CACHE: dict[tuple[int, str], object] = {}
-_BCAST_CAP = 4
-
-
-def _bloom_broadcast(sc, digest: str, raw: bytes):
-    """Broadcast of the serialized word table, cached per (gateway, digest)
-    (ADVICE r5): a long-lived incremental-ingest session calling
-    bloom_prefilter per batch previously created a fresh broadcast every
-    call and never released it. Superseded entries are unpersisted on
-    eviction; entries from a dead gateway are dropped (nothing to release)."""
-    from gchq_data_quality_spark.functions.dedup import _gateway_token
-
-    key = (_gateway_token(), digest)
-    bcast = _BCAST_CACHE.get(key)
-    if bcast is None:
-        for stale in [k for k in _BCAST_CACHE if k[0] != key[0]]:
-            _BCAST_CACHE.pop(stale, None)
-        while len(_BCAST_CACHE) >= _BCAST_CAP:
-            _, old = _BCAST_CACHE.popitem()
-            try:
-                old.unpersist()
-            except Exception:
-                pass
-        bcast = sc.broadcast(raw)
-        _BCAST_CACHE[key] = bcast
-    return bcast
+# Broadcast of the serialized word table per (application, digest): a
+# long-lived incremental-ingest session calling bloom_prefilter per batch
+# reuses one broadcast per bloom; the oldest past the cap is unpersisted,
+# and a new SparkContext starts an empty cache (session_memo).
+_BCAST_CACHE = SessionMemo(cap=4, release=unpersist)
 
 
 def bloom_prefilter(
@@ -276,7 +256,8 @@ def bloom_prefilter(
 
     raw = bloom.to_bytes()
     digest = hashlib.sha1(raw).hexdigest()
-    payload = _bloom_broadcast(df.sparkSession.sparkContext, digest, raw)
+    sc = df.sparkSession.sparkContext
+    payload = _BCAST_CACHE.get(sc, digest, lambda: sc.broadcast(raw))
     want = keep == "maybe"
 
     @F.pandas_udf("boolean")

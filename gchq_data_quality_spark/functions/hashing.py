@@ -116,3 +116,17 @@ def count_per_doc(doc_idx: np.ndarray, n_docs: int) -> np.ndarray:
     if len(doc_idx) == 0:
         return np.zeros(n_docs, dtype=np.int64)
     return np.bincount(doc_idx, minlength=n_docs)
+
+
+def content_digest(meta, *arrays: np.ndarray) -> str:
+    """sha1 over ``repr(meta)`` and each array's dtype, shape and raw bytes:
+    a model's identity without serialising it (``to_bytes`` compresses,
+    tens of ms for the perplexity tables)."""
+    import hashlib
+
+    h = hashlib.sha1(repr(meta).encode())
+    for a in arrays:
+        a = np.ascontiguousarray(a)
+        h.update(repr((a.dtype.str, a.shape)).encode())
+        h.update(a.data)
+    return h.hexdigest()

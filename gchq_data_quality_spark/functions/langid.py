@@ -14,7 +14,6 @@ The model rides to executors via sc.broadcast, per the north rule's
 
 from __future__ import annotations
 
-import hashlib
 import io
 from dataclasses import dataclass
 
@@ -26,9 +25,11 @@ from pyspark.sql import types as T
 
 from gchq_data_quality_spark.functions.hashing import (
     batch_ngram_features,
+    content_digest,
     count_per_doc,
     reduce_per_doc,
 )
+from gchq_data_quality_spark.session_memo import MODEL_BROADCASTS
 
 # Byte bigrams + trigrams: the standard fastText-langid feature set.
 # Unigrams (single bytes) add ~50% more features for no measurable accuracy
@@ -44,6 +45,9 @@ class LangIdModel:
     log_probs: np.ndarray  # (n_langs, buckets) float32 smoothed log-probs
     priors: np.ndarray  # (n_langs,) log class priors
     buckets: int
+
+    def digest(self) -> str:
+        return content_digest((self.languages, self.buckets), self.log_probs, self.priors)
 
     def to_bytes(self) -> bytes:
         buf = io.BytesIO()
@@ -155,12 +159,12 @@ def _model_cache(digest: str, payload) -> "LangIdModel":
 def langid_udf(spark: SparkSession, model: LangIdModel):
     """Returns a pandas_udf: text -> struct<lang string, confidence double>.
 
-    The model is broadcast once; each Arrow batch is scored with vectorised
-    numpy (no per-row Python).
+    The model is broadcast once per application (``MODEL_BROADCASTS``);
+    each Arrow batch is scored with vectorised numpy (no per-row Python).
     """
-    raw = model.to_bytes()
-    digest = hashlib.sha1(raw).hexdigest()
-    payload = spark.sparkContext.broadcast(raw)
+    sc = spark.sparkContext
+    digest = model.digest()
+    payload = MODEL_BROADCASTS.get(sc, ("langid", digest), lambda: sc.broadcast(model.to_bytes()))
     schema = T.StructType(
         [
             T.StructField("lang", T.StringType()),

@@ -14,7 +14,6 @@ as langid.py.
 
 from __future__ import annotations
 
-import hashlib
 import io
 from dataclasses import dataclass
 
@@ -26,9 +25,11 @@ from pyspark.sql import types as T
 
 from gchq_data_quality_spark.functions.hashing import (
     batch_ngram_features,
+    content_digest,
     count_per_doc,
     reduce_per_doc,
 )
+from gchq_data_quality_spark.session_memo import MODEL_BROADCASTS
 
 DEFAULT_BUCKETS = 1 << 18
 VOCAB = 256.0  # byte alphabet for smoothing
@@ -40,6 +41,9 @@ class PerplexityModel:
     counts_lo: np.ndarray  # (buckets,) bigram (context) counts
     buckets: int
     k: float = 0.1
+
+    def digest(self) -> str:
+        return content_digest((self.buckets, self.k), self.counts_hi, self.counts_lo)
 
     def to_bytes(self) -> bytes:
         buf = io.BytesIO()
@@ -126,9 +130,9 @@ def _model_cache(digest: str, payload) -> "PerplexityModel":
 
 
 def perplexity_udf(spark: SparkSession, model: PerplexityModel):
-    raw = model.to_bytes()
-    digest = hashlib.sha1(raw).hexdigest()
-    payload = spark.sparkContext.broadcast(raw)
+    sc = spark.sparkContext
+    digest = model.digest()
+    payload = MODEL_BROADCASTS.get(sc, ("ppl", digest), lambda: sc.broadcast(model.to_bytes()))
 
     @F.pandas_udf(T.DoubleType())
     def _ppl(texts: pd.Series) -> pd.Series:

@@ -12,21 +12,31 @@ The north-rule pipeline over the image+caption table
 3. **Annotate**: per-rule evaluated/passing boolean columns + the keep/drop
    combiner (keep = AND over (passing OR not-evaluated)) + caption_scrubbed
    via the compiled regexp chain. Image bytes pass through untouched.
-4. **Audit**: ONE aggregation of conditional sums over the flag columns ->
-   one DataQualityResult row per rule (same shape as the reference's
-   DataQualityResult, results/models.py:52-144).
+4. **Audit**: ONE observed job: the conditional sums over the flag columns
+   ride ``DataFrame.observe`` on a ``noop`` write of those columns, and each
+   task's partial sums merge on the driver -> one DataQualityResult row per
+   rule (same shape as the reference's DataQualityResult,
+   results/models.py:52-144).
 
-Scale design: the whole thing is a single stage until the audit's 1-row
-reduce — no joins, no wide shuffle. Optional salted repartition on the phash
-prefix defeats caption-duplication skew (hot phash clusters spread across
-``salt`` buckets deterministically via xxhash64(image_id), no rand()).
+Scale design: the whole thing is a single stage, the audit included — no
+joins, no wide shuffle, no 1-row reduce. The Column plan (derived
+heuristics, rule flags, keep, caption_scrubbed) is built once per
+(``sc.applicationId``, input schema, config, model digests) and the audit
+sums once per (application, config), memoised in a ``SessionMemo``.
+Building them took ~2,360 py4j round trips per annotate() and ~890 per
+audit() (0.27-0.38 s and 0.20-0.29 s of driver time per warm call, 4k rows
+on 4 cores); a repeated call on a known schema — one per job batch, one
+per request of a long-lived session — makes ~100 of each. Optional salted
+repartition on the phash prefix defeats caption-duplication skew (hot phash
+clusters spread across ``salt`` buckets deterministically via
+xxhash64(image_id), no rand()).
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field as dc_field
+from dataclasses import dataclass, replace, field as dc_field
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from gchq_data_quality_spark.functions import text as text_fns
@@ -44,6 +54,11 @@ from gchq_data_quality_spark.results import (
     DataQualityResult,
     calculate_pass_rate,
 )
+from gchq_data_quality_spark.session_memo import SessionMemo
+
+# annotate plans and audit exprs, memoised per application (_plan and
+# _audit_plan say what each is keyed on)
+_PLANS = SessionMemo(cap=16)
 
 
 @dataclass
@@ -61,6 +76,19 @@ class QualityFilterConfig:
     scrubber: Scrubber = dc_field(default_factory=Scrubber)
     salt: int | None = None  # salt buckets for skew-safe repartition
     repartition_to: int | None = None
+
+
+@dataclass(frozen=True)
+class _AnnotatePlan:
+    """Every Column annotate() applies. Only the scoring UDF calls are made
+    per annotate() call (see ``_derive``)."""
+
+    caption: Column
+    repartition: tuple[int, Column] | None  # (partitions, salted key)
+    derived: dict[str, Column]
+    # (column, scoring UDF, {column: field of the UDF's struct} or None)
+    scorers: tuple
+    flags: dict[str, Column]
 
 
 class QualityFilterPipeline:
@@ -122,17 +150,25 @@ class QualityFilterPipeline:
         return rules
 
     # ------------------------------------------------------------------
-    def derive(self, df: DataFrame) -> DataFrame:
-        """Add scoring columns (one projection; UDFs batched via Arrow)."""
+    def _plan(self, df: DataFrame) -> _AnnotatePlan:
+        """The memoised Column plan for ``df``'s schema: built on the first
+        call per (application, input schema, config, model digests)."""
+        models = (self.langid_model, self.ppl_model)
+        digests = tuple(m.digest() if m is not None else None for m in models)
+        key = ("annotate", df.schema.json(), repr(self.config), digests)
+        return _PLANS.get(df.sparkSession.sparkContext, key, lambda: self._build_plan(df))
+
+    def _build_plan(self, df: DataFrame) -> _AnnotatePlan:
         c = self.config
         caption = F.col(c.caption_col)
 
+        repartition = None
         if c.salt and c.repartition_to:
             # skew-safe shuffle: hot phash prefixes spread over `salt` buckets;
             # deterministic (hash of the row id, no rand()).
             salt_col = F.pmod(F.xxhash64(F.col(c.id_col)), F.lit(c.salt))
             prefix = F.substring(F.hex(F.col("phash")), 1, 4)
-            df = df.repartition(c.repartition_to, F.concat_ws("_", prefix, salt_col))
+            repartition = (c.repartition_to, F.concat_ws("_", prefix, salt_col))
 
         def null_guard(expr):
             return F.when(caption.isNull(), F.lit(None)).otherwise(expr)
@@ -149,51 +185,30 @@ class QualityFilterPipeline:
             derived["meta_ok"] = metadata_consistent(
                 F.col("bytes"), F.col("w"), F.col("h"), F.col("fmt")
             )
-        df = df.withColumns(derived)
+        spark = df.sparkSession
+        scorers = []
         if self.langid_model is not None and self.ppl_model is not None:
             # fused scorer: one Arrow round-trip for both models (scoring.py)
             from gchq_data_quality_spark.functions.scoring import scores_udf
 
-            udf = scores_udf(df.sparkSession, self.langid_model, self.ppl_model)
-            return (
-                df.withColumn("__scores", udf(caption))
-                .withColumns(
-                    {
-                        "lang": F.col("__scores.lang"),
-                        "lang_confidence": F.col("__scores.confidence"),
-                        "ppl": F.col("__scores.ppl"),
-                    }
-                )
-                .drop("__scores")
-            )
-        if self.langid_model is not None:
-            udf = langid_udf(df.sparkSession, self.langid_model)
-            df = (
-                df.withColumn("__lid", udf(caption))
-                .withColumns(
-                    {
-                        "lang": F.col("__lid.lang"),
-                        "lang_confidence": F.col("__lid.confidence"),
-                    }
-                )
-                .drop("__lid")
-            )
-        if self.ppl_model is not None:
-            udf = perplexity_udf(df.sparkSession, self.ppl_model)
-            df = df.withColumn("ppl", udf(caption))
-        return df
+            unpack = {
+                "lang": F.col("__scores.lang"),
+                "lang_confidence": F.col("__scores.confidence"),
+                "ppl": F.col("__scores.ppl"),
+            }
+            scorers.append(("__scores", scores_udf(spark, self.langid_model, self.ppl_model), unpack))
+        else:
+            if self.langid_model is not None:
+                unpack = {
+                    "lang": F.col("__lid.lang"),
+                    "lang_confidence": F.col("__lid.confidence"),
+                }
+                scorers.append(("__lid", langid_udf(spark, self.langid_model), unpack))
+            if self.ppl_model is not None:
+                scorers.append(("ppl", perplexity_udf(spark, self.ppl_model), None))
+        plan = _AnnotatePlan(caption, repartition, derived, tuple(scorers), flags={})
+        compiled = self._compiled(self._derive(plan, df))
 
-    def _compiled(self, df: DataFrame) -> list[CompiledRule]:
-        dtypes = {f.name: f.dataType for f in df.schema.fields}
-        return [r.compile(F.col, dtypes.__getitem__) for r in self.rules()]
-
-    def annotate(self, df: DataFrame) -> DataFrame:
-        """derive + per-rule flags + keep + caption_scrubbed (all lazy)."""
-        c = self.config
-        derived = self.derive(df)
-        compiled = self._compiled(derived)
-
-        # single withColumns batch (one analyzer pass instead of ~18).
         # `keep` references the flag EXPRESSIONS, not the added columns —
         # identical values, and the flags are cheap boolean exprs over
         # derived columns (never the scoring UDFs, which live behind plain
@@ -208,31 +223,72 @@ class QualityFilterPipeline:
             flags[f"dq_{rid}_passing"] = passing
             keep = keep & (passing | ~evaluated)
         flags["keep"] = keep
-        flags["caption_scrubbed"] = F.when(
-            F.col(c.caption_col).isNull(), F.lit(None)
-        ).otherwise(c.scrubber.apply(F.col(c.caption_col)))
-        return derived.withColumns(flags)
+        flags["caption_scrubbed"] = null_guard(c.scrubber.apply(caption))
+        return replace(plan, flags=flags)
+
+    @staticmethod
+    def _derive(plan: _AnnotatePlan, df: DataFrame) -> DataFrame:
+        if plan.repartition is not None:
+            df = df.repartition(*plan.repartition)
+        df = df.withColumns(plan.derived)
+        for name, udf, unpack in plan.scorers:
+            # a fresh UDF call per plan: a PythonUDF expression carries one
+            # resultId, which two plans (or a union of them) must not share
+            df = df.withColumn(name, udf(plan.caption))
+            if unpack is not None:
+                df = df.withColumns(unpack).drop(name)
+        return df
+
+    def derive(self, df: DataFrame) -> DataFrame:
+        """Add scoring columns (one projection; UDFs batched via Arrow)."""
+        return self._derive(self._plan(df), df)
+
+    def _compiled(self, df: DataFrame) -> list[CompiledRule]:
+        dtypes = {f.name: f.dataType for f in df.schema.fields}
+        return [r.compile(F.col, dtypes.__getitem__) for r in self.rules()]
+
+    def annotate(self, df: DataFrame) -> DataFrame:
+        """derive + per-rule flags + keep + caption_scrubbed (all lazy).
+
+        The Columns come from a plan memoised per (``sc.applicationId``,
+        input schema, config, model digests), so a repeated call on the same
+        schema builds no expression and only applies the cached Columns:
+        the derive steps, then ONE withColumns of the flags (one analyzer
+        pass instead of ~18). A changed config or model is a new key."""
+        plan = self._plan(df)
+        return self._derive(plan, df).withColumns(plan.flags)
 
     # ------------------------------------------------------------------
+    def _audit_plan(self, sc) -> tuple[list[str], list]:
+        """(flag columns, their aggregation exprs), memoised per
+        (application, config, which models are set) — what rules() reads."""
+        key = ("audit", repr(self.config), self.langid_model is not None, self.ppl_model is not None)
+        return _PLANS.get(sc, key, self._build_audit_plan)
+
+    def _build_audit_plan(self) -> tuple[list[str], list]:
+        cols, aggs = [], []
+        for rule in self.rules():
+            rid = rule.rule_id
+            evaluated, passing = f"dq_{rid}_evaluated", f"dq_{rid}_passing"
+            cols += [evaluated, passing]
+            aggs.append(F.sum(F.col(evaluated).cast("long")).alias(f"e_{rid}"))
+            aggs.append(
+                F.sum((F.col(evaluated) & F.col(passing)).cast("long")).alias(f"p_{rid}")
+            )
+        cols.append("keep")
+        aggs.append(F.sum(F.col("keep").cast("long")).alias("__kept"))
+        aggs.append(F.count(F.lit(1)).alias("__total"))
+        return cols, aggs
+
     def audit_agg_exprs(self) -> list:
         """The flag-only aggregation exprs (one pass, map-side combinable).
 
         Counts are plain sums, so callers running in batches (e.g. the
         checkpointed job) can aggregate each batch's flags and ADD the rows
-        together — see ``report_from_counts``.
+        together — see ``report_from_counts``. Built once per application
+        and config, like annotate's plan.
         """
-        aggs = []
-        for rule in self.rules():
-            rid = rule.rule_id
-            aggs.append(F.sum(F.col(f"dq_{rid}_evaluated").cast("long")).alias(f"e_{rid}"))
-            aggs.append(
-                F.sum(
-                    (F.col(f"dq_{rid}_evaluated") & F.col(f"dq_{rid}_passing")).cast("long")
-                ).alias(f"p_{rid}")
-            )
-        aggs.append(F.sum(F.col("keep").cast("long")).alias("__kept"))
-        aggs.append(F.count(F.lit(1)).alias("__total"))
-        return aggs
+        return list(self._audit_plan(SparkSession.active().sparkContext)[1])
 
     def report_from_counts(self, counts) -> DataQualityReport:
         """Build the per-rule report from an e_/p_/__kept/__total mapping
@@ -258,14 +314,29 @@ class QualityFilterPipeline:
         return DataQualityReport(results=results)
 
     def audit(self, annotated: DataFrame) -> DataQualityReport:
-        """One aggregation over the flag columns -> per-rule results.
+        """One observed job over the flag columns -> per-rule results.
+
+        The ``audit_agg_exprs`` sums ride ``DataFrame.observe`` on a
+        ``noop`` write of the flag columns: ONE job and one stage, no
+        exchange; each task's partial sums merge on the driver. (An
+        ``agg().collect()`` runs two jobs under AQE: the partial aggregate,
+        then the 1-row final reduce.) An empty input observes 0 rows and NULL
+        sums, which report as ``records_evaluated=0, pass_rate=None``.
 
         ``annotated`` can be the lazy annotate() output OR a re-read of the
         written output (the flags are plain columns) — the latter is the
         cheap path: a column-pruned boolean scan, no UDF re-execution.
         """
-        row = annotated.agg(*self.audit_agg_exprs()).collect()[0]
-        return self.report_from_counts(row)
+        cols, aggs = self._audit_plan(annotated.sparkSession.sparkContext)
+        observation = Observation()
+        (
+            annotated.select(*cols)
+            .observe(observation, *aggs)
+            .write.format("noop")
+            .mode("overwrite")
+            .save()
+        )
+        return self.report_from_counts(observation.get)
 
     def report_to_df(self, spark, report: DataQualityReport) -> DataFrame:
         rows = [

@@ -141,13 +141,49 @@ def test_optimal_params_shape():
 
 def test_bloom_prefilter_broadcast_reused_per_digest(spark):
     """ADVICE r5: repeated prefilters with the same bloom must reuse ONE
-    broadcast (keyed per gateway+digest), not leak a fresh one per call."""
+    broadcast (keyed per application+digest), not leak a fresh one per call."""
     from gchq_data_quality_spark.functions import bloom as bloom_mod
 
     df = spark.createDataFrame([(i,) for i in range(50)], "v long")
     bf = build_bloom(df, "v", expected_items=50, fpp=0.01)
-    bloom_mod._BCAST_CACHE.clear()
+    bloom_mod._BCAST_CACHE.entries.clear()
     a = bloom_prefilter(df, "v", bf)
     b = bloom_prefilter(df, "v", bf)
     assert a.count() == 50 and b.count() == 50
-    assert len(bloom_mod._BCAST_CACHE) == 1
+    assert len(bloom_mod._BCAST_CACHE.entries) == 1
+
+
+def test_bloom_broadcast_cache_evicts_oldest_and_scopes_to_application(spark, monkeypatch):
+    """Past its cap the cache unpersists the OLDEST broadcast (FIFO, not
+    popitem's newest), and a new application id misses instead of serving
+    a broadcast of a stopped context."""
+    from pyspark import Broadcast, SparkContext
+
+    from gchq_data_quality_spark.functions import bloom as bloom_mod
+
+    cache = bloom_mod._BCAST_CACHE
+    unpersisted = []
+    real_unpersist = Broadcast.unpersist
+
+    def spy(self, blocking=False):
+        unpersisted.append(self)
+        return real_unpersist(self, blocking)
+
+    monkeypatch.setattr(Broadcast, "unpersist", spy)
+    df = spark.createDataFrame([(i,) for i in range(50)], "v long")
+    cache.entries.clear()
+    blooms = [build_bloom(df, "v", expected_items=100 * (n + 1), fpp=0.01) for n in range(cache.cap + 1)]
+    for bf in blooms[: cache.cap]:
+        assert bloom_prefilter(df, "v", bf).count() == 50
+    assert len(cache.entries) == cache.cap
+    first_key, oldest = next(iter(cache.entries.items()))
+    assert bloom_prefilter(df, "v", blooms[cache.cap]).count() == 50
+    assert unpersisted == [oldest]
+    assert first_key not in cache.entries and len(cache.entries) == cache.cap
+
+    key, stale = next(iter(cache.entries.items()))  # blooms[1], now the oldest
+    monkeypatch.setattr(SparkContext, "applicationId", property(lambda sc: "another-app"))
+    assert bloom_prefilter(df, "v", blooms[1]).count() == 50
+    assert list(cache.entries) == [key]
+    assert cache.entries[key] is not stale
+    assert unpersisted == [oldest]  # stale entries are dropped, not released

@@ -231,3 +231,161 @@ def test_keep_agrees_exactly_per_defect(annotated):
     ).collect()
     mismatched = {r.defect: (r.n_agree, r.n) for r in rows if r.n_agree != r.n}
     assert not mismatched, mismatched
+
+
+# ---------------------------------------------------------------------------
+# memoised Column plans (pipeline._PLANS) and one broadcast per model
+# ---------------------------------------------------------------------------
+
+
+def _pipe(models, **config):
+    langid_model, ppl_model = models
+    return QualityFilterPipeline(
+        QualityFilterConfig(allowed_langs=LANGUAGES, **config), langid_model, ppl_model
+    )
+
+
+@pytest.fixture
+def plan_builds(monkeypatch):
+    """Empty plan memo plus a counter of rule compilations (one per plan built)."""
+    from gchq_data_quality_spark import pipeline as pipeline_mod
+
+    pipeline_mod._PLANS.entries.clear()
+    builds = []
+    compiled = QualityFilterPipeline._compiled
+
+    def counting(self, df):
+        builds.append(df.columns)
+        return compiled(self, df)
+
+    monkeypatch.setattr(QualityFilterPipeline, "_compiled", counting)
+    return builds
+
+
+def _sorted_rows(df):
+    return sorted(df.collect(), key=lambda r: r.image_id)
+
+
+def test_second_annotate_rebuilds_nothing(spark, models, annotated, plan_builds):
+    pipe = _pipe(models)
+    pipe.annotate(generate_images_df(spark, 20))
+    assert len(plan_builds) == 1
+    again = pipe.annotate(generate_images_df(spark, N_ROWS))
+    assert len(plan_builds) == 1
+    # same rows as the fixture's fresh pipeline built from scratch
+    out, _ = annotated
+    assert again.columns == out.columns
+    assert _sorted_rows(again) == _sorted_rows(out)
+
+
+def test_annotate_plan_is_keyed_on_schema_config_and_application(
+    spark, models, plan_builds, monkeypatch
+):
+    pipe = _pipe(models)
+    df = generate_images_df(spark, 60)
+    base = pipe.annotate(df)
+    assert len(plan_builds) == 1
+
+    extra = pipe.annotate(df.withColumn("extra", F.lit(1)))
+    assert len(plan_builds) == 2
+    assert "extra" in extra.columns
+
+    pipe.config.ppl_max = 0.0  # nothing passes the perplexity rule now
+    strict = pipe.annotate(df)
+    assert len(plan_builds) == 3
+    before = base.filter("dq_perplexity_passing").count()
+    assert before > 0
+    assert strict.filter("dq_perplexity_passing").count() == 0
+
+    from pyspark import SparkContext
+
+    monkeypatch.setattr(SparkContext, "applicationId", property(lambda sc: "another-app"))
+    pipe.annotate(df)
+    assert len(plan_builds) == 4
+
+
+def test_annotate_union_of_two_plans(spark, models):
+    """Each annotate() makes its own scoring-UDF call (a PythonUDF carries one
+    resultId), so two annotated frames union cleanly."""
+    pipe = _pipe(models)
+    df = generate_images_df(spark, 80)
+    a, b = df.filter("image_id < 'img00000040'"), df.filter("image_id >= 'img00000040'")
+    union = pipe.annotate(a).unionByName(pipe.annotate(b))
+    separate = _sorted_rows(pipe.annotate(a)) + _sorted_rows(pipe.annotate(b))
+    assert _sorted_rows(union) == sorted(separate, key=lambda r: r.image_id)
+    assert union.count() == 80
+
+
+def test_salted_repartition_keeps_rows(spark, models):
+    df = generate_images_df(spark, 40)
+    salted = _pipe(models, salt=3, repartition_to=4).annotate(df)
+    assert salted.rdd.getNumPartitions() == 4
+    assert _sorted_rows(salted) == _sorted_rows(_pipe(models).annotate(df))
+
+
+def test_scores_udf_broadcasts_models_once(spark, models, monkeypatch):
+    from gchq_data_quality_spark.functions.scoring import scores_udf
+    from gchq_data_quality_spark.session_memo import MODEL_BROADCASTS
+
+    langid_model, ppl_model = models
+    sc = spark.sparkContext
+    MODEL_BROADCASTS.entries.clear()
+    made = []
+    broadcast = sc.broadcast
+    monkeypatch.setattr(sc, "broadcast", lambda value: made.append(1) or broadcast(value))
+    first = scores_udf(spark, langid_model, ppl_model)
+    second = scores_udf(spark, langid_model, ppl_model)
+    assert len(made) == 1
+    # the closures ship (digest, payload) only: no Column or JVM handle
+    assert first.func.__code__.co_freevars == ("digest", "payload")
+    df = generate_images_df(spark, 30)
+    got = df.select(second(F.col("caption")).alias("s")).agg(F.count("s.lang")).collect()
+    assert got[0][0] > 0
+
+
+# ---------------------------------------------------------------------------
+# audit: one observed job
+# ---------------------------------------------------------------------------
+
+
+def test_audit_of_empty_inputs(spark, annotated, models):
+    out, _ = annotated
+    pipe = _pipe(models)
+    empties = {
+        "empty": spark.createDataFrame([], out.schema),
+        "no partitions": spark.createDataFrame(spark.sparkContext.emptyRDD(), out.schema),
+        "filtered to nothing": out.filter(F.lit(False)),
+    }
+    assert empties["no partitions"].rdd.getNumPartitions() == 0
+    for name, frame in empties.items():
+        report = pipe.audit(frame)
+        assert len(report.results) == len(pipe.rules()), name
+        for r in report.results:
+            assert r.records_evaluated == 0, name
+            assert r.pass_rate is None, name
+            assert r.measurement_sample == "kept=0/total=0", name
+
+
+def test_audit_matches_aggregation_in_one_job(spark, annotated, models):
+    out, report = annotated
+    pipe = _pipe(models)
+    sc = spark.sparkContext
+    sc.setJobGroup("dq-audit-one-job", "audit")
+    try:
+        observed = pipe.audit(out)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup("dq-audit-one-job")) == 1
+
+    row = out.agg(*pipe.audit_agg_exprs()).collect()[0]
+    aggregated = pipe.report_from_counts(row)
+
+    def counts(rep):
+        return [
+            (r.rule_id, r.records_evaluated, r.pass_rate, r.measurement_sample)
+            for r in rep.results
+        ]
+
+    assert counts(observed) == counts(aggregated) == counts(report)
+    kept = out.filter("keep").count()
+    assert observed.results[0].measurement_sample == f"kept={kept}/total={N_ROWS}"
