@@ -35,31 +35,26 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from gchq_data_quality_spark.session_memo import SessionMemo
+
 SF_DEFAULT = "/root/testdata/sf0.001"
 
 
-_SCHEMA_CACHE: dict[tuple[int, str], "object"] = {}
+# inferred parquet schemas per (application, path): metadata only, never
+# rows or results
+_SCHEMAS = SessionMemo(cap=64)
 
 
 def _read(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Parquet read with a per-gateway SCHEMA memo: footer schema inference
-    costs ~70 ms of py4j/listing per call, paid by every invocation of
-    every query. Caching the inferred StructType (metadata only — never
-    rows or results) lets repeat invocations plan straight from the schema.
-    Keyed on the live gateway so a restarted JVM re-infers."""
+    """Parquet read with a memoised SCHEMA: footer schema inference costs
+    ~70 ms of py4j/listing per call, paid by every invocation of every
+    query, so repeat invocations plan straight from the inferred StructType.
+    A new application infers again (session_memo)."""
     path = f"{sf_dir}/{name}.parquet"
-    try:
-        from gchq_data_quality_spark.functions.dedup import _gateway_token
-
-        key = (_gateway_token(), path)
-        schema = _SCHEMA_CACHE.get(key)
-        if schema is None:
-            df = spark.read.parquet(path)
-            _SCHEMA_CACHE[key] = df.schema
-            return df
-        return spark.read.schema(schema).parquet(path)
-    except Exception:
-        return spark.read.parquet(path)
+    schema = _SCHEMAS.get(
+        spark.sparkContext, path, lambda: spark.read.parquet(path).schema
+    )
+    return spark.read.schema(schema).parquet(path)
 
 
 def _rule_metrics_df(spark: SparkSession, df: DataFrame, rules) -> DataFrame:

@@ -42,7 +42,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from gchq_data_quality_spark.functions.dedup import _splitmix64
+from gchq_data_quality_spark.functions.shingle_arrow import _splitmix64
 from gchq_data_quality_spark.session_memo import SessionMemo, unpersist
 
 _P = (1 << 61) - 1  # Mersenne prime modulus for the position family

@@ -17,9 +17,13 @@ Six strategies, all shuffle-conscious:
 - embedding_dedup        : cosine near-duplicate pairs via random-hyperplane
                            LSH buckets over an embedding column
 
-All hashing is Spark-native (xxhash64 / crc32) — deterministic, no seeds, no
-Python in the hot path. Each returns a DataFrame, so results compose with the
-rest of the engine (e.g. anti-join to drop duplicates).
+Hashing is deterministic and seed-free. The exact paths hash with Spark's
+native xxhash64; the text LSH paths (minhash, simhash, n-gram Jaccard) run
+their shingle/signature kernel as one vectorized ``mapInArrow`` pass
+(shingle_arrow.py) that reproduces Spark's xxhash64 bit-for-bit, and derive
+band and rotation buckets natively from its materialized output. Each
+returns a DataFrame, so results compose with the rest of the engine (e.g.
+anti-join to drop duplicates).
 
 Scale notes: the LSH paths bound the candidate set per bucket; hot buckets
 (boilerplate text) are the skew risk — cap candidates per bucket via a
@@ -31,35 +35,14 @@ on top of the window's partitioning.
 
 from __future__ import annotations
 
-from functools import lru_cache
-
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from gchq_data_quality_spark.functions.shingle_arrow import (
+    band_bucket_structs,
+    shingle_frame,
+)
 from gchq_data_quality_spark.functions.text import fingerprint
-
-# Expression memoisation: building the wide signature folds costs real
-# per-invocation time — every Column op is a py4j round-trip (~3 ms), and
-# the minhash/simhash folds are hundreds of ops (~0.6 s per QUERY
-# CONSTRUCTION, measured round 4; the 64-term simhash assembly was 2.2 s
-# before being reshaped as a runtime fold). Unresolved Column trees are
-# immutable, capture no SparkSession/conf state, and stay valid for the
-# lifetime of the JVM gateway, so identical (column name, params) requests
-# reuse one tree. Keyed by COLUMN NAME, not Column object — callers pass
-# names — plus the GATEWAY identity (ADVICE r4): the cached trees hold py4j
-# JVM object refs that die with the gateway, so a recreated gateway
-# (embedded restart, gateway death) must start a fresh cache instead of
-# serving dead refs as opaque py4j errors.
-
-
-def _gateway_token() -> int:
-    """Identity of the live py4j gateway backing SparkContext (0 if none)."""
-    from pyspark import SparkContext
-
-    sc = SparkContext._active_spark_context
-    gw = getattr(sc, "_gateway", None) if sc is not None else None
-    return id(gw) if gw is not None else 0
-
 
 # ---------------------------------------------------------------------------
 # Exact dedup
@@ -238,74 +221,6 @@ def _shingles(col: Column, k: int = 5) -> Column:
     ).otherwise(F.array(norm))
 
 
-def _hashed_shingles(col: Column, k: int = 5) -> Column:
-    """array<long>: ONE xxhash64 per shingle. All downstream minhash families
-    are derived from this single hash with integer multiply-adds — hashing the
-    shingle string once instead of once per family (32 string hashes -> 1
-    string hash + 32 two-op affine mixes; measured ~15x on the full fold)."""
-    return F.transform(_shingles(col, k), lambda s: F.xxhash64(s))
-
-
-_MASK64 = (1 << 64) - 1
-
-
-def _splitmix64(x: int) -> int:
-    """Deterministic 64-bit mixer (public splitmix64 constants) used to derive
-    the per-family affine coefficients — no RNG state, same families every
-    run on every executor."""
-    x = (x + 0x9E3779B97F4A7C15) & _MASK64
-    x = ((x ^ (x >> 30)) * 0xBF58476D1CE4E5B9) & _MASK64
-    x = ((x ^ (x >> 27)) * 0x94D049BB133111EB) & _MASK64
-    return x ^ (x >> 31)
-
-
-_MERSENNE31 = (1 << 31) - 1
-
-
-def _family_coeffs(n_hashes: int) -> list[tuple[int, int]]:
-    """(a_i odd 31-bit, b_i 31-bit) universal-hash family coefficients for
-    ``h_i(x) = (a_i * x + b_i) mod p`` with p = 2^31-1.
-
-    The mod is load-bearing, not a formality: without it the affine map is
-    MONOTONIC in x, so every family's min lands on the same argmin shingle
-    and the "n_hashes independent permutations" collapse into one (signature
-    agreement becomes 0-or-1 instead of ~Jaccard, and banding adds nothing).
-    The mod makes each family a distinct pseudo-permutation — the classic
-    universal-hashing minhash.
-
-    Coefficients are bounded to 31 bits so ``a_i * (h & 0xFFFFFFFF) + b_i``
-    stays below 2^63 — the arithmetic can NEVER overflow a long, which
-    matters because Spark 4 clusters default to ANSI mode where a wrapping
-    multiply raises ARITHMETIC_OVERFLOW instead of wrapping. (The engine's
-    own sessions disable ANSI, but operators must also run correctly in a
-    caller-provided ANSI session.)
-    """
-    mask31 = (1 << 31) - 1
-    return [
-        ((_splitmix64(2 * i + 1) & mask31) | 1, _splitmix64(2 * i + 2) & mask31)
-        for i in range(n_hashes)
-    ]
-
-
-def _family_min_step(coeffs: list[tuple[int, int]]):
-    """The shared fold step: elementwise min of the family hashes of one
-    evaluated shingle hash (a lambda variable — two integer ops + one pmod
-    per family, no re-traversal)."""
-
-    def step(acc: Column, h: Column) -> Column:
-        # 31-bit coeffs x 32-bit masked value (+31-bit b): cannot overflow
-        h32 = h.bitwiseAND(F.lit((1 << 32) - 1))
-        hashes = F.array(
-            *[
-                F.pmod(h32 * F.lit(a) + F.lit(b), F.lit(_MERSENNE31))
-                for a, b in coeffs
-            ]
-        )
-        return F.zip_with(acc, hashes, lambda a, b: F.least(a, b))
-
-    return step
-
-
 def _ensure_parallelism(df: DataFrame) -> DataFrame:
     """Repartition ONLY under-partitioned inputs up to the session's default
     parallelism, so the (CPU-bound) shingle/signature kernel runs on every
@@ -381,110 +296,12 @@ def _parquet_row_groups(spark, relation, stop_at: int) -> int:
     return total
 
 
-def _minhash_signature(shingle_col: Column, n_hashes: int) -> Column:
-    """array<long> of length n_hashes: min over shingles of affine families
-    of one base xxhash64 (h_i = a_i*(h & 0xFFFFFFFF) + b_i with 31-bit
-    coefficients — the standard universal-hashing minhash construction,
-    bounded so it can never overflow under ANSI mode).
-
-    ONE traversal of the hashed-shingle array: ``aggregate`` folds a
-    running-minimum accumulator of n_hashes values. ``shingle_col`` must be
-    the *hashed* shingles (``_hashed_shingles``) so each family derivation is
-    two integer ops on the evaluated lambda variable — the naive per-family
-    ``transform`` formulation re-inlines (and re-computes) the whole shingle
-    array into every family expression (Catalyst does no CSE across array
-    higher-order functions), which measured 25x slower at 32 families.
-    """
-    coeffs = _family_coeffs(n_hashes)
-    init = F.array_repeat(F.lit((1 << 63) - 1).cast("long"), n_hashes)
-    return F.aggregate(shingle_col, init, _family_min_step(coeffs))
-
-
-@lru_cache(maxsize=128)
-def _hashed_shingles_expr_cached(token: int, col_name: str, k: int) -> Column:
-    return _hashed_shingles(F.col(col_name), k)
-
-
-def _hashed_shingles_expr(col_name: str, k: int) -> Column:
-    """Memoised ``_hashed_shingles(F.col(col_name), k)`` (see module note)."""
-    return _hashed_shingles_expr_cached(_gateway_token(), col_name, k)
-
-
-def _use_arrow_shingles() -> bool:
-    """The shingle/fold stage runs Arrow-vectorized (shingle_arrow.py) by
-    default — bit-identical outputs, measured ~2x on the LSH queries (the
-    interpreted per-shingle HOF folds were the dominant cost). Env knob
-    SPARK_GRAFT_NATIVE_SHINGLES=1 restores the pure-JVM expressions for
-    clusters where Python workers are the scarce resource."""
-    import os
-
-    return os.environ.get("SPARK_GRAFT_NATIVE_SHINGLES", "0") != "1"
-
-
 def minhash_signatures(
     df: DataFrame, text_col: str, id_col: str, n_hashes: int = 32, k: int = 5
 ) -> DataFrame:
-    if _use_arrow_shingles():
-        from gchq_data_quality_spark.functions.shingle_arrow import shingle_frame
-
-        return shingle_frame(df, text_col, id_col, k, n_hashes=n_hashes).select(
-            "id", "sig"
-        )
-    return df.select(
-        F.col(id_col).alias("id"),
-        _minhash_signature(_hashed_shingles(F.col(text_col), k), n_hashes).alias("sig"),
+    return shingle_frame(df, text_col, id_col, k, n_hashes=n_hashes).select(
+        "id", "sig"
     )
-
-
-def _minhash_band_buckets(
-    shingle_col: Column, n_hashes: int, bands: int
-) -> Column:
-    """array<struct<band:int,bucket:long>> computed INSIDE the signature fold,
-    over *hashed* shingles (see ``_hashed_shingles``).
-
-    The band-bucket hashes are derived in the ``finish`` lambda of the same
-    single ``aggregate`` that builds the minhash signature, so the signature
-    expression is evaluated exactly once per row. Projecting ``sig[i]`` from a
-    separate signature column re-inlines the whole fold once per referenced
-    element (Catalyst does no CSE across higher-order functions) — measured
-    18x slower at 8 bands x 4 rows.
-    """
-    rows_per_band = n_hashes // bands
-    coeffs = _family_coeffs(n_hashes)
-    init = F.array_repeat(F.lit((1 << 63) - 1).cast("long"), n_hashes)
-    step = _family_min_step(coeffs)
-
-    def finish(acc: Column) -> Column:
-        # acc is the materialised signature array here — element access is
-        # O(1) on the evaluated value, no recompute.
-        return F.array(
-            *[
-                F.struct(
-                    F.lit(b).alias("band"),
-                    F.xxhash64(
-                        F.concat_ws(
-                            "_",
-                            *[acc[b * rows_per_band + r] for r in range(rows_per_band)],
-                        )
-                    ).alias("bucket"),
-                )
-                for b in range(bands)
-            ]
-        )
-
-    return F.aggregate(shingle_col, init, step, finish)
-
-
-@lru_cache(maxsize=128)
-def _band_buckets_expr_cached(
-    token: int, col_name: str, n_hashes: int, bands: int
-) -> Column:
-    return _minhash_band_buckets(F.col(col_name), n_hashes, bands)
-
-
-def _band_buckets_expr(col_name: str, n_hashes: int, bands: int) -> Column:
-    """Memoised band-bucket fold over a NAMED hashed-shingle column."""
-    return _band_buckets_expr_cached(_gateway_token(), col_name, n_hashes, bands)
 
 
 def minhash_candidate_pairs(
@@ -504,22 +321,13 @@ def minhash_candidate_pairs(
     collide and the candidate set explodes quadratically. The per-bucket cap
     (max_bucket) additionally bounds blowup on boilerplate-heavy buckets.
     """
-    df = _ensure_parallelism(df)
-    if _use_arrow_shingles():
-        from gchq_data_quality_spark.functions.shingle_arrow import (
-            band_bucket_structs,
-            shingle_frame,
-        )
-
-        sf = shingle_frame(df, text_col, id_col, k, n_hashes=n_hashes)
-        banded = sf.select(
-            "id",
-            F.explode(band_bucket_structs(F.col("sig"), n_hashes, bands)).alias("bb"),
-        )
-    else:
-        banded = df.select(
-            F.col(id_col).alias("id"), _hashed_shingles_expr(text_col, k).alias("sh")
-        ).select("id", F.explode(_band_buckets_expr("sh", n_hashes, bands)).alias("bb"))
+    sf = shingle_frame(
+        _ensure_parallelism(df), text_col, id_col, k, n_hashes=n_hashes
+    )
+    banded = sf.select(
+        "id",
+        F.explode(band_bucket_structs(F.col("sig"), n_hashes, bands)).alias("bb"),
+    )
     return _candidates_from_banded(banded, max_bucket)
 
 
@@ -616,22 +424,10 @@ def ngram_jaccard_pairs(
     ``sh`` (both verify joins broadcast), and minhash_dedup shuffles
     2.7 MB instead of 140 MB.
     """
-    base = _ensure_parallelism(df)
-    if _use_arrow_shingles():
-        from gchq_data_quality_spark.functions.shingle_arrow import (
-            band_bucket_structs,
-            shingle_frame,
-        )
-
-        shingled = shingle_frame(
-            base, text_col, id_col, k, want_sh=True, n_hashes=n_hashes
-        ).localCheckpoint()
-        bands_col = band_bucket_structs(F.col("sig"), n_hashes, bands)
-    else:
-        shingled = base.select(
-            F.col(id_col).alias("id"), _hashed_shingles_expr(text_col, k).alias("sh")
-        ).localCheckpoint()
-        bands_col = _band_buckets_expr("sh", n_hashes, bands)
+    shingled = shingle_frame(
+        _ensure_parallelism(df), text_col, id_col, k, want_sh=True, n_hashes=n_hashes
+    ).localCheckpoint()
+    bands_col = band_bucket_structs(F.col("sig"), n_hashes, bands)
     candidates = _candidates_from_banded(
         shingled.select("id", F.explode(bands_col).alias("bb")), max_bucket
     )
@@ -735,151 +531,6 @@ def minhash_dedup(
 # SimHash
 # ---------------------------------------------------------------------------
 
-# 4 bits of the shingle hash spread into 4 16-bit counter lanes of one long:
-# nib * _LANE_MUL places bit l of the nibble at position 15l + l = 16l and
-# _LANE_MASK clears the cross-terms; the 15-gap keeps the 4-bit-wide terms
-# DISJOINT, so the multiply is carry-free (max spread term 15 * 2^45 < 2^50).
-# 4 16-bit lanes x 16 longs = the 64 counters. Shingles are sliced to 32767
-# elements: that bounds every lane count at 32767, so the ACCUMULATOR's
-# signed-long value never exceeds 32767 * (2^48 + 2^32 + 2^16 + 1) < 2^63 —
-# no ANSI overflow on the fold's adds. (The lane FIELD could hold 65535, but
-# past 32767 the top lane's accumulated value crosses 2^63 and an ANSI
-# session raises ARITHMETIC_OVERFLOW mid-fold — the driver's sessions are
-# ANSI, so the cap must protect the accumulator, not just the lane width.)
-#
-# Measured dead ends (kept out, documented so they stay out): an 8-bit-lane
-# inner fold per 255-shingle chunk halves the arithmetic but the per-chunk
-# F.slice COPIES the hash array and the nested-HOF machinery is interpreted
-# — 6.3 s vs this version's 5.2 s at sf0.1 (allocation, not ALU, is the
-# bottleneck on this host). 16-bit lanes are also maximal for one multiply:
-# b lanes x 16 bits <= 64 forces b <= 4 bits per group.
-_LANE_MUL = (1 << 45) | (1 << 30) | (1 << 15) | 1
-_LANE_MASK = (1 << 48) | (1 << 32) | (1 << 16) | 1
-_MAX_SIMHASH_SHINGLES = 32767
-
-
-def _simhash_fold(
-    col: Column, k: int, finish, sample: int | None = None
-) -> Column:
-    """ONE ``aggregate`` traversal of the shingle hashes folding PACKED bit
-    counters — 16 longs x 4 16-bit lanes (+ the element count) in a struct;
-    ``finish(acc)`` shapes the output from the final counts.
-
-    ``sample``: consistent bottom-k sketching — documents with more than
-    ``sample`` distinct shingles fold only the ``sample`` SMALLEST shingle
-    hashes. Selection by hash value is the minhash trick: near-duplicate
-    documents select near-identical subsets, so the majority votes stay
-    aligned, while the per-document fold cost is bounded by a constant
-    instead of the document length (the standard sketch move for simhash
-    over long documents). One array_sort + slice per ROW (cheap) buys a
-    bounded number of per-SHINGLE fold steps (the expensive part).
-
-    Formulation history (each measured at sf0.1): per-bit aggregates
-    re-evaluated the shingle-hash array 64 times (97 s / 500 docs — no CSE
-    across higher-order functions); a 64-element int-array accumulator was
-    one fold but allocated two 64-wide arrays per shingle on a host where
-    allocation serialises (7.1 s). Packing turns the per-shingle work into
-    16 shift/mask/multiply/add lanes on struct fields — no per-shingle
-    arrays at all (5.2 s).
-    """
-    # clamp: a sample above _MAX_SIMHASH_SHINGLES would void the documented
-    # ANSI overflow bound (lane counts past 32767 push the packed
-    # accumulator's top lane over 2^63 mid-fold on ANSI sessions)
-    cap = _MAX_SIMHASH_SHINGLES if sample is None else min(
-        sample, _MAX_SIMHASH_SHINGLES
-    )
-    raw = F.transform(_shingles(col, k), lambda s: F.xxhash64(s))
-
-    def fold(hs: Column) -> Column:
-        # bind-once wrapper: `hs` is referenced by size+sort+slice below and
-        # each reference to a HOF-bearing expression would re-evaluate it
-        if sample is None:
-            hashes = F.slice(hs, 1, cap)
-        else:
-            hashes = F.when(
-                F.size(hs) > cap, F.slice(F.array_sort(hs), 1, cap)
-            ).otherwise(hs)
-        # accumulator = array of 17 longs (16 packed counter words + the
-        # element count in slot 16). Measured 1.4x faster than a named-struct
-        # accumulator: zip_with(+) over a primitive long array beats
-        # per-shingle CreateNamedStruct row construction.
-        init = F.array_repeat(F.lit(0).cast("long"), 17)
-
-        def step(acc: Column, h: Column) -> Column:
-            # h is the lambda variable (an evaluated long): each slot is
-            # 4 integer ops on it, no re-traversal
-            spreads = [
-                (
-                    F.shiftrightunsigned(h, 4 * i).bitwiseAND(F.lit(15))
-                    * F.lit(_LANE_MUL)
-                ).bitwiseAND(F.lit(_LANE_MASK))
-                for i in range(16)
-            ]
-            return F.zip_with(
-                acc,
-                F.array(*spreads, F.lit(1).cast("long")),
-                lambda a, b: a + b,
-            )
-
-        return F.aggregate(hashes, init, step, finish)
-
-    return F.transform(F.array(raw), fold)[0]
-
-
-def _lane_count(acc: Column, b: int) -> Column:
-    """Counter for bit ``b`` out of the packed accumulator array (O(1)
-    reads on the materialised fold result)."""
-    return F.shiftrightunsigned(acc[b // 4], 16 * (b % 4)).bitwiseAND(
-        F.lit(0xFFFF)
-    )
-
-
-def _assemble_simhash(acc: Column) -> Column:
-    """64-bit fingerprint from the final packed accumulator: bit b set iff
-    more than half the shingle hashes have bit b set.
-
-    Shaped as a runtime fold over the 16 counter words instead of an
-    unrolled 64-term OR chain: the unrolled form built ~640 Column objects
-    — each a py4j round-trip — making EXPRESSION CONSTRUCTION the dominant
-    cost of every simhash query invocation (measured 2.2 s of the 4 s
-    driver-bench time at sf0.1, invariant to data size). The fold builds
-    ~40 Columns once; the 16 extra interpreted iterations per row are noise
-    next to the per-shingle fold.
-
-    Dynamic shift amounts aren't expressible (shiftleft/shiftrightunsigned
-    take literal bit counts), so: the lane shift within a word is a static
-    literal (4 lanes unrolled), and the word's bit position is a multiply
-    by a LITERAL power-of-two array (bit * 2^(4w), max 2^60 < 2^63 — no
-    ANSI overflow) followed by a static shiftleft for the lane offset
-    (bitwise, safely reaches the sign bit)."""
-    total = acc[16]
-    pow4w = F.array(*[F.lit(1 << (4 * w)).cast("long") for w in range(16)])
-
-    def word_step(out: Column, w: Column) -> Column:
-        word = F.get(acc, w)
-        res = out
-        for lane in range(4):
-            cnt = F.shiftrightunsigned(word, 16 * lane).bitwiseAND(F.lit(0xFFFF))
-            bit = (
-                F.when(cnt * 2 > total, F.lit(1))
-                .otherwise(F.lit(0))
-                .cast("long")
-            )
-            res = res.bitwiseOR(F.shiftleft(bit * F.get(pow4w, w), lane))
-        return res
-
-    return F.aggregate(
-        F.sequence(F.lit(0), F.lit(15)), F.lit(0).cast("long"), word_step
-    )
-
-
-def simhash_column(col: Column, k: int = 3, sample: int | None = None) -> Column:
-    """64-bit simhash over character k-gram hashes, all native exprs.
-    ``sample``: optional consistent bottom-k shingle sketch (see
-    ``_simhash_fold``)."""
-    return _simhash_fold(col, k, _assemble_simhash, sample=sample)
-
-
 def hamming64(a: Column, b: Column) -> Column:
     return F.bit_count(a.bitwiseXOR(b))
 
@@ -926,10 +577,9 @@ def simhash_dedup_pairs(
     """Near-dup pairs by simhash: bucket on 4 rotated prefixes, verify
     hamming distance within buckets (standard simhash permutation trick).
 
-    The rotation buckets are assembled in the ``finish`` lambda of the SAME
-    single fold that computes the simhash (rotations of the assembled
-    fingerprint are cheap integer ops on the materialised accumulator), so
-    each row pays exactly one shingle traversal regardless of rotation count.
+    The fingerprint comes out of the shingle kernel as a materialized
+    column, so its rotations are a few integer ops per row and each row
+    pays one shingle pass regardless of rotation count.
 
     ``sample=192`` (default): long documents fold only their 192 smallest
     shingle hashes — a consistent bottom-k sketch, so near-duplicates still
@@ -941,73 +591,19 @@ def simhash_dedup_pairs(
     members per (rot, bucket) before the self-join, bounding the worst-case
     join fan-out the same way minhash_candidate_pairs does.
     """
-    if _use_arrow_shingles():
-        from gchq_data_quality_spark.functions.shingle_arrow import shingle_frame
-
-        sf = shingle_frame(
-            _ensure_parallelism(df), text_col, id_col, 3, simhash_sample=sample
-        )
-        # rotations of the MATERIALISED fingerprint column are a few integer
-        # ops per row — the bind-once wrapper is only needed when `sim` is an
-        # unevaluated HOF fold
-        all_buckets = sf.select(
-            "id",
-            F.explode(
-                simhash_rotations(F.col("sim"), 4, prefix_bits)
-            ).alias("rb"),
-        ).select(
-            "id",
-            F.col("rb.sim").alias("sim"),
-            F.col("rb.rot").alias("rot"),
-            F.col("rb.bucket").alias("bucket"),
-        )
-        return _capped_hamming_pairs(all_buckets, max_bucket, max_hamming)
-    rot_buckets = _rot_buckets_expr(text_col, 3, prefix_bits, sample)
-    all_buckets = (
-        _ensure_parallelism(df)
-        .select(F.col(id_col).alias("id"), F.explode(rot_buckets).alias("rb"))
-        .select(
-            "id",
-            F.col("rb.sim").alias("sim"),
-            F.col("rb.rot").alias("rot"),
-            F.col("rb.bucket").alias("bucket"),
-        )
+    sf = shingle_frame(
+        _ensure_parallelism(df), text_col, id_col, 3, simhash_sample=sample
+    )
+    all_buckets = sf.select(
+        "id",
+        F.explode(simhash_rotations(F.col("sim"), 4, prefix_bits)).alias("rb"),
+    ).select(
+        "id",
+        F.col("rb.sim").alias("sim"),
+        F.col("rb.rot").alias("rot"),
+        F.col("rb.bucket").alias("bucket"),
     )
     return _capped_hamming_pairs(all_buckets, max_bucket, max_hamming)
-
-
-@lru_cache(maxsize=128)
-def _rot_buckets_expr_cached(
-    token: int,
-    col_name: str,
-    k: int,
-    prefix_bits: int,
-    sample: int | None,
-    n_rot: int = 4,
-) -> Column:
-    return _simhash_fold(
-        F.col(col_name),
-        k,
-        lambda acc: F.transform(
-            F.array(_assemble_simhash(acc)),
-            lambda sim: simhash_rotations(sim, n_rot, prefix_bits),
-        )[0],
-        sample=sample,
-    )
-
-
-def _rot_buckets_expr(
-    col_name: str, k: int, prefix_bits: int, sample: int | None, n_rot: int = 4
-) -> Column:
-    """Memoised simhash fold whose ``finish`` assembles the fingerprint AND
-    its rotation buckets — one shingle traversal per row regardless of
-    rotation count. bind-once: simhash_rotations references its input ~11x,
-    and each textual reference to a HOF-bearing subtree (the assembly fold)
-    re-evaluates it — wrapping the assembled fingerprint in
-    transform(array) makes the references lambda-variable reads."""
-    return _rot_buckets_expr_cached(
-        _gateway_token(), col_name, k, prefix_bits, sample, n_rot
-    )
 
 
 def _capped_hamming_pairs(

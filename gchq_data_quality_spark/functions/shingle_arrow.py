@@ -1,38 +1,37 @@
-"""Arrow-vectorized shingle hashing + minhash/simhash folds.
+"""Arrow-vectorized shingle hashing + minhash/simhash folds: the one engine
+behind every LSH text query (minhash_signatures, minhash_candidate_pairs,
+ngram_jaccard_pairs, minhash_dedup, simhash_dedup_pairs).
 
-The native formulation of the LSH text family evaluates three interpreted
-per-element expression chains per document — character-k-gram substrings,
-one xxhash64 per shingle, then a 32-family affine fold (minhash) or a
-16-lane packed bit-count fold (simhash). Spark's higher-order functions do
-not participate in whole-stage codegen, so every shingle pays interpreted
-expression dispatch (~10 us/element measured on this host): at sf0.1 the
-substring generation ALONE costs ~0.75 s of a 1.4-2.1 s query.
+Spark's higher-order functions do not participate in whole-stage codegen,
+so a per-shingle fold written as native expressions pays interpreted
+expression dispatch on every element (~10 us/element measured on a 4-vCPU
+host; the JVM formulation ran the LSH queries ~2x slower). This module
+instead makes one `mapInArrow` crossing per batch (optimization guide
+§4.2: hand whole batches to vectorized native code): the JVM computes the
+normalization (`lower` + `\\s+` collapse — keeping Spark's exact string
+semantics), the Python side computes sliding-window shingle hashes, the
+minhash signature and/or the simhash fingerprint with numpy over the Arrow
+buffers, and the band/rotation bucket derivation stays native on the
+RETURNED materialized columns (`xxhash64(concat_ws)` over `sig`, rotations
+of `sim`).
 
-This module replaces the per-shingle folds with one `mapInArrow` crossing
-(optimization guide §4.2: hand whole batches to vectorized native code):
-the JVM computes the normalization (`lower` + `\\s+` collapse — keeping
-Spark's exact string semantics), the Python side computes sliding-window
-shingle hashes, the minhash signature and/or the simhash fingerprint with
-numpy over the Arrow buffers, and the band/rotation bucket derivation
-stays native on the RETURNED materialized columns (`xxhash64(concat_ws)`
-over `sig`, rotations of `sim`) so bucket values are produced by the very
-same JVM functions as before.
-
-Exactness contract (pinned by tests/test_shingle_arrow.py differentials):
-every output is BIT-IDENTICAL to the native expressions in dedup.py —
+Exactness contract, pinned by tests/test_shingle_arrow.py against an
+independent plain-Python reference (normalisation and shingle hashes from
+Spark's own `regexp_replace`/`lower`/`xxhash64`) and by the sf0.001 pair-set
+goldens of the three LSH queries:
  * shingles are distinct character-k-grams of the normalized text in
    first-occurrence order (`array_distinct` semantics), with the whole
    normalized string as the single shingle when it is shorter than k and
    `[42]` (= xxhash64 seed) for NULL text;
  * shingle hashes are Spark's `xxhash64` (XXH64, seed 42, UTF-8 bytes) —
-   reimplemented here and verified bit-for-bit, vectorized for the ASCII
-   fast path (where byte windows == character windows) and scalar for
-   non-ASCII / short / null documents;
+   reimplemented here, vectorized for the ASCII fast path (where byte
+   windows == character windows) and scalar for non-ASCII / short / null
+   documents;
  * the minhash signature is min over shingles of
-   ``(a_i * (h & 0xFFFFFFFF) + b_i) mod (2^31 - 1)`` with dedup.py's
-   `_family_coeffs`;
- * the simhash fingerprint takes the same bottom-`sample` consistent
-   sketch (ascending signed order) and the same strict majority vote.
+   ``(a_i * (h & 0xFFFFFFFF) + b_i) mod (2^31 - 1)`` with `_family_coeffs`;
+ * the simhash fingerprint is a strict-majority bit vote over the first
+   `_SIMHASH_CAP` hashes, or over the bottom-`sample` hashes in ascending
+   signed order (a consistent sketch) when `sample` is set.
 
 Scale shape: one extra JVM->Python->JVM crossing per row carrying the
 normalized text in and the hashed-shingle array / signature out. The
@@ -46,13 +45,16 @@ ngram_jaccard_pairs checkpoints (id, sh, sig), shuffles only
 
 from __future__ import annotations
 
-from functools import lru_cache
 from typing import Iterator
 
 import numpy as np
 import pyarrow as pa
+from pyspark import SparkContext
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+from gchq_data_quality_spark.session_memo import SessionMemo
 
 __all__ = ["shingle_frame", "band_bucket_structs"]
 
@@ -66,6 +68,39 @@ _SEED = 42
 _M64 = (1 << 64) - 1
 _MERSENNE31 = np.uint64((1 << 31) - 1)
 _XXH64_NULL = np.int64(42)  # Spark hash exprs return the seed for NULL input
+
+
+def _splitmix64(x: int) -> int:
+    """Deterministic 64-bit mixer (public splitmix64 constants) used to derive
+    the per-family affine coefficients — no RNG state, same families every
+    run on every executor."""
+    x = (x + 0x9E3779B97F4A7C15) & _M64
+    x = ((x ^ (x >> 30)) * 0xBF58476D1CE4E5B9) & _M64
+    x = ((x ^ (x >> 27)) * 0x94D049BB133111EB) & _M64
+    return x ^ (x >> 31)
+
+
+def _family_coeffs(n_hashes: int) -> list[tuple[int, int]]:
+    """(a_i odd 31-bit, b_i 31-bit) universal-hash family coefficients for
+    ``h_i(x) = (a_i * x + b_i) mod p`` with p = 2^31-1.
+
+    The mod is load-bearing, not a formality: without it the affine map is
+    MONOTONIC in x, so every family's min lands on the same argmin shingle
+    and the "n_hashes independent permutations" collapse into one (signature
+    agreement becomes 0-or-1 instead of ~Jaccard, and banding adds nothing).
+    The mod makes each family a distinct pseudo-permutation — the classic
+    universal-hashing minhash.
+
+    Coefficients are bounded to 31 bits so ``a_i * (h & 0xFFFFFFFF) + b_i``
+    stays below 2^63: the same arithmetic can never overflow a long in a
+    JVM expression either (Spark 4 defaults to ANSI, where a wrapping
+    multiply raises ARITHMETIC_OVERFLOW).
+    """
+    mask31 = (1 << 31) - 1
+    return [
+        ((_splitmix64(2 * i + 1) & mask31) | 1, _splitmix64(2 * i + 2) & mask31)
+        for i in range(n_hashes)
+    ]
 
 
 def _rotl(x: np.ndarray, r: int) -> np.ndarray:
@@ -305,8 +340,8 @@ def _doc_chunks(counts: np.ndarray) -> Iterator[tuple[int, int, int, int]]:
 def _minhash_sig(
     values: np.ndarray, counts: np.ndarray, coeffs_a: np.ndarray, coeffs_b: np.ndarray
 ) -> np.ndarray:
-    """(n_docs, n_hashes) int64 minhash signatures — identical arithmetic to
-    dedup._family_min_step: min over shingles of (a*(h&0xFFFFFFFF)+b) mod p.
+    """(n_docs, n_hashes) int64 minhash signatures: min over shingles of
+    (a*(h&0xFFFFFFFF)+b) mod p, one (a, b) pair of _family_coeffs per family.
 
     Folds one family at a time over a doc-aligned chunk, so the temporaries
     are chunk-sized vectors, never a (rows x families) matrix."""
@@ -328,10 +363,9 @@ def _minhash_sig(
 def _simhash(
     values: np.ndarray, counts: np.ndarray, sample: int | None, cap: int
 ) -> np.ndarray:
-    """int64[n_docs] simhash fingerprints — identical to dedup._simhash_fold
-    + _assemble_simhash: bottom-``sample`` consistent sketch by ascending
-    signed hash when a doc exceeds the cap (else first-occurrence order,
-    sliced at the ANSI-safety cap), strict-majority bit vote."""
+    """int64[n_docs] simhash fingerprints: bottom-``sample`` consistent
+    sketch by ascending signed hash when a doc exceeds the cap (else the
+    first ``cap`` hashes in occurrence order), strict-majority bit vote."""
     starts = np.concatenate(([0], np.cumsum(counts)[:-1]))
     doc_idx = np.repeat(np.arange(len(counts), dtype=np.int64), counts)
     rank = np.arange(len(values), dtype=np.int64) - np.repeat(starts, counts)
@@ -364,7 +398,12 @@ def _simhash(
     return out.view(np.int64)
 
 
-# dedup.py's _MAX_SIMHASH_SHINGLES without a circular import at module load
+# At most this many shingle hashes vote on a simhash fingerprint (the first
+# ones in occurrence order, or the bottom-k sketch when a smaller `sample`
+# is set). The cap is part of the fingerprint DEFINITION, not an overflow
+# guard: a document with more distinct shingles votes over this prefix
+# only, so changing the value changes long documents' fingerprints and
+# every stored simhash with them.
 _SIMHASH_CAP = 32767
 
 
@@ -388,8 +427,6 @@ def shingle_frame(
     normalization runs in the JVM (exact Spark semantics), everything after
     the crossing reads materialized columns.
     """
-    from gchq_data_quality_spark.functions.dedup import _family_coeffs
-
     want_sim = simhash_sample != "unset"
     sim_sample: int | None = simhash_sample if want_sim else None  # type: ignore[assignment]
     sim_cap = (
@@ -401,8 +438,6 @@ def shingle_frame(
 
     id_field = df.select(F.col(id_col).alias("id")).schema.fields[0]
     out_fields = [id_field]
-    from pyspark.sql import types as T
-
     if want_sh:
         out_fields.append(T.StructField("sh", T.ArrayType(T.LongType())))
     if n_hashes:
@@ -456,24 +491,20 @@ def shingle_frame(
     return projected.mapInArrow(compute, out_schema)
 
 
+# band-bucket trees per (column, n_hashes, bands): every Column op is a
+# py4j round trip and this tree is ~50 of them
+_BAND_STRUCTS = SessionMemo(cap=64)
+
+
 def band_bucket_structs(sig: Column, n_hashes: int, bands: int) -> Column:
     """array<struct<band:int,bucket:long>> from a MATERIALIZED signature
-    column — the same concat_ws/xxhash64 bucket derivation as the native
-    fold's finish lambda, now over plain column element reads.
-
-    Memoised per gateway when called on the canonical ``sig`` column (every
-    Column op is a py4j round-trip; this tree is ~50 of them — see the
-    dedup.py expression-cache note)."""
-    from gchq_data_quality_spark.functions.dedup import _gateway_token
-
-    if sig._jc.toString() == "sig":
-        return _band_structs_cached(_gateway_token(), n_hashes, bands)
-    return _band_structs_build(sig, n_hashes, bands)
-
-
-@lru_cache(maxsize=64)
-def _band_structs_cached(token: int, n_hashes: int, bands: int) -> Column:
-    return _band_structs_build(F.col("sig"), n_hashes, bands)
+    column: band b's bucket is xxhash64 of its rows_per_band signature
+    values joined by "_". Memoised per application (session_memo)."""
+    return _BAND_STRUCTS.get(
+        SparkContext._active_spark_context,
+        (sig._jc.toString(), n_hashes, bands),
+        lambda: _band_structs_build(sig, n_hashes, bands),
+    )
 
 
 def _band_structs_build(sig: Column, n_hashes: int, bands: int) -> Column:

@@ -9,17 +9,24 @@ manifests) — the parquet stand-in for Iceberg snapshot IDs.
 
 from __future__ import annotations
 
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, SparkSession
 
 
 def _has_iceberg(spark: SparkSession) -> bool:
+    """Whether the Iceberg source is on the JVM classpath. Only a Java
+    ClassNotFoundException means "absent"; any other failure (a dead
+    gateway, a class that fails to initialise) is raised rather than
+    silently degrading a catalog table name to a parquet path."""
     try:
         spark._jvm.java.lang.Class.forName(  # noqa: SLF001
             "org.apache.iceberg.spark.source.IcebergSource"
         )
-        return True
-    except Exception:
-        return False
+    except Py4JJavaError as e:
+        if e.java_exception.getClass().getName() == "java.lang.ClassNotFoundException":
+            return False
+        raise
+    return True
 
 
 def read_table(spark: SparkSession, path_or_table: str) -> DataFrame:

@@ -98,6 +98,36 @@ def parse_args(argv: list[str]) -> argparse.Namespace:
     return p.parse_args(argv)
 
 
+def check_input_lineage(manifest, lineage: dict) -> None:
+    """Pin the input filters that run BEFORE bucketing (--size-gate params,
+    --history-fps path) in the manifest. Completed and pending buckets only
+    see the same rows when every run of one manifest uses the same values,
+    so the first run records them and any later run that adds, removes or
+    changes either one raises, whether or not it resumes."""
+    state = manifest.load()
+    meta = state.get("meta", {})
+    prev = meta.get("lineage")
+    if prev is None and state["completed"]:
+        # a manifest written before the lineage record kept one key per flag
+        prev = {
+            "size_gate": meta.get("size_gate"),
+            "history_fps": meta.get("history_fps", {}).get("path"),
+        }
+    if prev is None:
+        manifest.merge_meta("lineage", lineage)
+        return
+    changed = [
+        f"--{key.replace('_', '-')} {prev.get(key)!r} -> {value!r}"
+        for key, value in lineage.items()
+        if prev.get(key) != value
+    ]
+    if changed:
+        raise ValueError(
+            f"Manifest input lineage differs ({'; '.join(changed)}): resuming "
+            "would mix input lineages — use a fresh manifest"
+        )
+
+
 def main(argv: list[str] | None = None) -> None:
     args = parse_args(argv if argv is not None else sys.argv[1:])
 
@@ -163,55 +193,30 @@ def main(argv: list[str] | None = None) -> None:
     )
     pipe = QualityFilterPipeline(config, langid_model, ppl_model)
 
-    # Resume-lineage guard, UNCONDITIONAL (ADVICE r5): a manifest written
-    # WITH --size-gate / --history-fps must not be resumed WITHOUT the flag
-    # (and vice versa the per-flag blocks below check the values) — the
-    # completed and pending buckets would see different input row sets.
-    from gchq_data_quality_spark.sources.checkpoint import (
-        CheckpointManifest as _CMGuard,
-    )
+    from gchq_data_quality_spark.sources.checkpoint import CheckpointManifest
 
-    _guard_meta = _CMGuard(args.manifest).load().get("meta", {})
-    if _guard_meta.get("size_gate") is not None and not args.size_gate:
-        raise ValueError(
-            f"Manifest was written with --size-gate params "
-            f"{_guard_meta['size_gate']!r}; resuming without --size-gate "
-            "would mix input lineages — use a fresh manifest"
-        )
-    if _guard_meta.get("history_fps", {}).get("path") and not args.history_fps:
-        raise ValueError(
-            f"Manifest was written with --history-fps "
-            f"{_guard_meta['history_fps']['path']!r}; resuming without "
-            "--history-fps would mix input lineages — use a fresh manifest"
-        )
+    check_input_lineage(
+        CheckpointManifest(args.manifest),
+        {
+            "size_gate": {
+                "min_side": args.min_side,
+                "max_aspect": args.max_aspect,
+                "max_pixels": args.max_pixels,
+            }
+            if args.size_gate
+            else None,
+            "history_fps": args.history_fps,
+        },
+    )
 
     if args.size_gate:
         # decode-free metadata gate, FIRST (cheapest filter wins): proven-bad
         # dims drop the row before the history probe, bucketing, decode, or
-        # any scoring touches it. Applied before bucketing, so the gate
-        # params are resume lineage exactly like --history-fps: pin them in
-        # the manifest and refuse to resume under different values.
+        # any scoring touches it.
         from pyspark.sql import functions as F
 
         from gchq_data_quality_spark.functions.images import image_size_flags
-        from gchq_data_quality_spark.sources.checkpoint import (
-            CheckpointManifest as _CM,
-        )
 
-        gate_params = {
-            "min_side": args.min_side,
-            "max_aspect": args.max_aspect,
-            "max_pixels": args.max_pixels,
-        }
-        _m = _CM(args.manifest)
-        _prev = _m.load().get("meta", {}).get("size_gate")
-        if _prev is not None and _prev != gate_params:
-            raise ValueError(
-                f"Manifest was written with --size-gate params {_prev!r}; "
-                f"resuming with {gate_params!r} would mix input lineages — "
-                "use a fresh manifest"
-            )
-        _m.merge_meta("size_gate", gate_params)
         flags = image_size_flags(
             F.col("w"), F.col("h"),
             min_side=args.min_side,
@@ -225,23 +230,6 @@ def main(argv: list[str] | None = None) -> None:
         )
 
     if args.history_fps:
-        # pin the history source in the manifest alongside n_buckets and
-        # key_col: resuming a partial run against a DIFFERENT history (or
-        # adding/removing --history-fps mid-run) would give completed and
-        # pending buckets different input row sets — raise instead.
-        from gchq_data_quality_spark.sources.checkpoint import (
-            CheckpointManifest as _CM,
-        )
-
-        _m = _CM(args.manifest)
-        _prev = _m.load().get("meta", {}).get("history_fps", {}).get("path")
-        if _prev not in (None, args.history_fps):
-            raise ValueError(
-                f"Manifest was written with --history-fps {_prev!r}; "
-                f"resuming with {args.history_fps!r} would mix input "
-                "lineages — use a fresh manifest"
-            )
-        _m.merge_meta("history_fps", {"path": args.history_fps})
         # incremental ingestion: drop rows already shipped by prior runs,
         # applied BEFORE bucketing so resume lineage sees the same filtered
         # input every run (the probe is deterministic). Payload-light (r5):
@@ -330,7 +318,7 @@ def main(argv: list[str] | None = None) -> None:
     # the re-processed slice. The batch is persisted so annotate's scoring
     # UDFs still run exactly once (the agg materialises the cache, the write
     # reads from it).
-    from gchq_data_quality_spark.sources.checkpoint import BUCKET_COL, CheckpointManifest
+    from gchq_data_quality_spark.sources.checkpoint import BUCKET_COL
 
     prefilter_by_bucket: dict[str, dict[str, int]] = {}
     caches: list = []

@@ -276,17 +276,17 @@ def test_minhash_families_are_independent_permutations(spark):
 
 
 def test_simhash_chunked_fold_exact_across_chunk_boundary(spark):
-    """A document with >255 distinct shingles spans multiple 255-element
-    inner chunks; the widened counts must equal a direct Python bit-count
-    (pins the SWAR spread + chunk merge exactly)."""
+    """A document with >255 distinct shingles: its per-bit vote counts
+    outgrow a byte, and the exact (unsampled) fingerprint must still equal
+    a direct Python majority vote over Spark's xxhash64 of its shingles."""
     import re
 
-    from gchq_data_quality_spark.functions.dedup import simhash_column
+    from gchq_data_quality_spark.functions.shingle_arrow import shingle_frame
 
     words = [f"item{i:04d}" for i in range(200)]
     text = " ".join(words)  # ~2000 chars -> >600 distinct 3-grams
     df = spark.createDataFrame([(0, text)], "doc_id long, text string")
-    got = df.select(simhash_column(F.col("text"), 3).alias("s")).collect()[0].s
+    got = shingle_frame(df, "text", "doc_id", 3, simhash_sample=None).collect()[0].sim
 
     norm = re.sub(r"\s+", " ", text.lower())
     shingles = list(dict.fromkeys(norm[i : i + 3] for i in range(len(norm) - 2)))
@@ -334,15 +334,14 @@ def test_simhash_bottomk_sampling_finds_long_near_dups(spark):
 
 
 def test_simhash_randomized_python_differential(spark):
-    """Randomised differential for the runtime-fold assembly (r4 rewrite):
-    20 random documents, each simhash checked bit-for-bit against a pure
-    Python majority vote over Spark's own xxhash64 of the shingles. Pins
-    the word-fold bit placement (bit * 2^(4w) << lane) across many random
-    counter patterns, including sign-bit cases."""
+    """Randomised differential for the exact simhash fingerprint: 20 random
+    documents, each checked bit-for-bit against a pure Python majority vote
+    over Spark's own xxhash64 of the shingles. Pins the bit placement
+    across many random counter patterns, including sign-bit cases."""
     import random
     import re
 
-    from gchq_data_quality_spark.functions.dedup import simhash_column
+    from gchq_data_quality_spark.functions.shingle_arrow import shingle_frame
 
     rng = random.Random(99)
     vocab = [f"w{i}" for i in range(300)]
@@ -353,10 +352,8 @@ def test_simhash_randomized_python_differential(spark):
         [(i, t) for i, t in enumerate(texts)], "doc_id long, text string"
     )
     got = {
-        r["doc_id"]: r["s"]
-        for r in df.select(
-            "doc_id", simhash_column(F.col("text"), 3).alias("s")
-        ).collect()
+        r["id"]: r["sim"]
+        for r in shingle_frame(df, "text", "doc_id", 3, simhash_sample=None).collect()
     }
 
     all_shingles = set()

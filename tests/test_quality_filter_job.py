@@ -496,6 +496,21 @@ def test_job_size_gate_param_change_on_resume_raises(spark, tmp_path, capsys):
         _run(tmp_path, ["--size-gate", "--min-side", "32"])
 
 
+@pytest.mark.parametrize("added", ["size-gate", "history-fps"])
+def test_job_input_filter_added_on_resume_raises(spark, tmp_path, capsys, added):
+    """A pre-bucketing input filter ADDED on resume would give the pending
+    buckets a different input row set than the completed ones: the first
+    run's lineage record (no gate, no history) must refuse it."""
+    _run(tmp_path, ["--buckets-per-batch", "4"])  # one batch, all 4 buckets
+    capsys.readouterr()
+    extra = {
+        "size-gate": ["--size-gate"],
+        "history-fps": ["--history-fps", str(tmp_path / "fps")],
+    }[added]
+    with pytest.raises(ValueError, match=added):
+        _run(tmp_path, extra)
+
+
 def test_job_gate_presence_change_on_resume_raises(spark, tmp_path, capsys):
     """ADVICE r5: the lineage guards must fire UNCONDITIONALLY — resuming a
     gated manifest WITHOUT --size-gate (or a history-probed manifest

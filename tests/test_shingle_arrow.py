@@ -1,18 +1,20 @@
-"""Differentials pinning the Arrow shingle engine (shingle_arrow.py) to the
-native expressions it replaces: the r6 optimization moved the per-shingle
-folds (character k-grams -> xxhash64 -> minhash families / simhash bit
-votes) from interpreted JVM higher-order functions to one numpy-vectorized
-mapInArrow crossing. These tests assert the outputs are BIT-IDENTICAL —
-including NULLs, empties, shorter-than-k docs, unicode (multi-byte UTF-8
-breaks the byte-window fast path), whitespace runs, and the bottom-k
-simhash sketch boundary — so the swap can never silently change a dedup
-decision."""
+"""Pins the shingle kernel (shingle_arrow.py), the one engine behind every
+LSH text query, to an independent plain-Python reference: Spark normalises
+the text (`regexp_replace(lower(text), '\\s+', ' ')`), Python takes the
+distinct first-occurrence code-point k-grams, Spark's own `xxhash64`
+hashes them, and the minhash signature and simhash fingerprint follow the
+textbook definitions. The edge corpus covers NULLs, empties, shorter-than-k
+docs, unicode (multi-byte UTF-8 breaks the byte-window fast path),
+whitespace runs and the bottom-k simhash sketch boundary. The pair sets of
+the three public LSH queries are pinned by goldens on sf0.001."""
 
 from __future__ import annotations
 
+import hashlib
 from pathlib import Path
 
 import numpy as np
+import pandas as pd
 import pyarrow as pa
 import pytest
 from pyspark.sql import functions as F
@@ -20,8 +22,10 @@ from pyspark.sql import functions as F
 from __spark_entry__ import SF_DEFAULT
 from gchq_data_quality_spark.functions import dedup as D
 from gchq_data_quality_spark.functions.shingle_arrow import (
+    _SIMHASH_CAP,
     _batch_shingle_hashes,
     _doc_chunks,
+    _family_coeffs,
     _minhash_sig,
     _simhash,
     shingle_frame,
@@ -56,28 +60,55 @@ def edge(spark):
     return spark.createDataFrame(EDGE_DOCS, "doc_id long, text string")
 
 
+def _reference(df, k, n_hashes, sample):
+    """{doc_id: (sh, sig, sim)} computed without the kernel."""
+    norms = [
+        (r[0], r[1])
+        for r in df.select(
+            "doc_id", F.regexp_replace(F.lower("text"), r"\s+", " ")
+        ).collect()
+    ]
+    grams = {}
+    for doc_id, norm in norms:
+        if norm is not None:
+            n = len(norm) - k + 1
+            grams[doc_id] = list(
+                dict.fromkeys(norm[i : i + k] for i in range(n)) if n > 0 else [norm]
+            )
+    distinct = sorted({g for gs in grams.values() for g in gs})
+    hashed = df.sparkSession.createDataFrame(pd.DataFrame({"g": distinct}), "g string")
+    hash_of = {
+        r[0]: r[1] for r in hashed.select("g", F.xxhash64("g")).collect()
+    }
+    a, b = (np.array(c, dtype=np.uint64) for c in zip(*_family_coeffs(n_hashes)))
+    cap = _SIMHASH_CAP if sample is None else min(sample, _SIMHASH_CAP)
+    out = {}
+    for doc_id, _ in norms:
+        sh = [hash_of[g] for g in grams[doc_id]] if doc_id in grams else [42]
+        h = np.array(sh, dtype=np.int64)
+        low = h.view(np.uint64) & np.uint64(0xFFFFFFFF)
+        sig = ((a[:, None] * low[None, :] + b[:, None]) % np.uint64(2**31 - 1)).min(1)
+        voters = np.sort(h)[:cap] if sample is not None else h[:cap]
+        bits = (voters.view(np.uint64)[:, None] >> np.arange(64, dtype=np.uint64)) & 1
+        fp = int(sum(1 << i for i, c in enumerate(bits.sum(0)) if 2 * c > len(voters)))
+        out[doc_id] = (sh, sig.astype(np.int64).tolist(), fp - (fp >> 63 << 64))
+    return out
+
+
 def _compare(df, k, n_hashes, sample):
-    native = df.select(
-        F.col("doc_id").alias("id"),
-        D._hashed_shingles(F.col("text"), k).alias("sh"),
-        D._minhash_signature(
-            D._hashed_shingles(F.col("text"), k), n_hashes
-        ).alias("sig"),
-        D._simhash_fold(
-            F.col("text"), k, D._assemble_simhash, sample=sample
-        ).alias("sim"),
-    )
-    arrow = shingle_frame(
-        df, "text", "doc_id", k, want_sh=True, n_hashes=n_hashes,
-        simhash_sample=sample,
-    )
-    nat = {r["id"]: r for r in native.collect()}
-    arr = {r["id"]: r for r in arrow.collect()}
-    assert set(nat) == set(arr)
-    for i in nat:
-        assert nat[i]["sh"] == arr[i]["sh"], f"sh mismatch doc {i}"
-        assert nat[i]["sig"] == arr[i]["sig"], f"sig mismatch doc {i}"
-        assert nat[i]["sim"] == arr[i]["sim"], f"sim mismatch doc {i}"
+    ref = _reference(df, k, n_hashes, sample)
+    got = {
+        r["id"]: (r["sh"], r["sig"], r["sim"])
+        for r in shingle_frame(
+            df, "text", "doc_id", k, want_sh=True, n_hashes=n_hashes,
+            simhash_sample=sample,
+        ).collect()
+    }
+    assert set(got) == set(ref)
+    for i, (sh, sig, sim) in ref.items():
+        assert got[i][0] == sh, f"sh mismatch doc {i}"
+        assert got[i][1] == sig, f"sig mismatch doc {i}"
+        assert got[i][2] == sim, f"sim mismatch doc {i}"
 
 
 def test_edge_corpus_k5(spark, edge):
@@ -114,25 +145,37 @@ def test_testdata_corpus(spark):
         _compare(docs, 7, 8, None)
 
 
-def test_pair_queries_identical_to_native(spark, monkeypatch):
-    """The three public LSH entry points must return identical rows under
-    both engines (the native path stays selectable for UDF-constrained
-    clusters via SPARK_GRAFT_NATIVE_SHINGLES=1)."""
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+# (count, sha256 of repr(sorted row tuples)) on sf0.001 documents, recorded
+# at commit 121a259, the last tree with a second, pure-JVM shingle engine,
+# after its test that both engines return identical rows on these three
+# queries had passed there.
+PAIR_GOLDENS = {
+    "minhash_candidates": (
+        299, "fef5a3d19055c913620eb8df40191f499e0bc2225da7dd11681dd59542520cef"
+    ),
+    "simhash_pairs": (
+        309, "be090b43f796684c499af56dd9ed925e5c33d2e47a8ee60c6bf5bbf124eb09a0"
+    ),
+    "ngram_jaccard": (
+        28, "62a615ad8007fdc54001b58f33275dacbd063ad7ec28fe4e96373ef18585daf4"
+    ),
+}
 
-    def rows(df):
-        return sorted(tuple(r) for r in df.collect())
 
-    for fn in (
-        lambda: D.minhash_candidate_pairs(docs, "text", "doc_id"),
-        lambda: D.simhash_dedup_pairs(docs, "text", "doc_id", max_hamming=8),
-        lambda: D.ngram_jaccard_pairs(docs, "text", "doc_id", threshold=0.7),
-    ):
-        monkeypatch.delenv("SPARK_GRAFT_NATIVE_SHINGLES", raising=False)
-        arrow_rows = rows(fn())
-        monkeypatch.setenv("SPARK_GRAFT_NATIVE_SHINGLES", "1")
-        native_rows = rows(fn())
-        assert arrow_rows == native_rows
+def test_pair_queries_match_goldens(spark):
+    """The pair sets of the three public LSH entry points. Only the verified
+    Jaccard pairs also have a DuckDB oracle (lsh_verified_pairs); the
+    candidate and simhash pair sets are pinned here alone."""
+    docs = spark.read.parquet(str(Path(SF_DEFAULT) / "documents.parquet"))
+    queries = {
+        "minhash_candidates": D.minhash_candidate_pairs(docs, "text", "doc_id"),
+        "simhash_pairs": D.simhash_dedup_pairs(docs, "text", "doc_id", max_hamming=8),
+        "ngram_jaccard": D.ngram_jaccard_pairs(docs, "text", "doc_id", threshold=0.7),
+    }
+    for name, df in queries.items():
+        rows = sorted(tuple(r) for r in df.collect())
+        digest = hashlib.sha256(repr(rows).encode()).hexdigest()
+        assert (len(rows), digest) == PAIR_GOLDENS[name], name
 
 
 def test_chunking_is_size_invariant():
@@ -142,7 +185,7 @@ def test_chunking_is_size_invariant():
     # ~150k shingle rows, so the production chunk size splits them too
     counts = rng.integers(1, 50, size=6000).astype(np.int64)
     values = rng.integers(-2**63, 2**63, size=int(counts.sum()), dtype=np.int64)
-    coeffs = D._family_coeffs(16)
+    coeffs = _family_coeffs(16)
     a = np.array([c for c, _ in coeffs], dtype=np.uint64)
     b = np.array([c for _, c in coeffs], dtype=np.uint64)
     ref_sig = _minhash_sig(values, counts, a, b)
