@@ -1774,6 +1774,8 @@ def oracle_sql() -> dict[str, str]:
     # NOTE: every integer SUM is CAST to BIGINT — DuckDB returns SUM(int) as
     # decimal128(38,0)/int128 in Arrow while Spark returns int64, which makes
     # the driver's value-hash differ on numerically identical results.
+    # Whitespace is spelled [ \t\n\x0b\f\r], Java's \s: DuckDB's (RE2) \s
+    # omits \x0b, so a vertical tab would split on Spark's side only.
     rule_row = (
         "SELECT 'r' AS rule_id, CAST({evaluated} AS BIGINT) AS records_evaluated, "
         "CAST({passing} AS BIGINT) AS records_passing, "
@@ -1875,7 +1877,7 @@ def oracle_sql() -> dict[str, str]:
         """,
         "doc_token_quality": r"""
             SELECT CAST(SUM(CASE WHEN LENGTH(TRIM(text)) = 0 THEN 0
-                            ELSE LEN(string_split_regex(TRIM(text), '\s+')) END) AS BIGINT) AS total_tokens,
+                            ELSE LEN(string_split_regex(TRIM(text), '[ \t\n\x0b\f\r]+')) END) AS BIGINT) AS total_tokens,
                    CAST(SUM(LENGTH(text)) AS BIGINT) AS total_chars,
                    COUNT(*) AS n_docs,
                    CAST(SUM(CASE WHEN LENGTH(text) > 0 AND
@@ -1887,7 +1889,7 @@ def oracle_sql() -> dict[str, str]:
                    CAST(SUM(CASE WHEN LENGTH(text) >= 100 THEN 1 ELSE 0 END) AS BIGINT) AS n_long,
                    COUNT(DISTINCT CASE WHEN text IS NOT NULL THEN
                         LOWER(TRIM(regexp_replace(regexp_replace(text,
-                            '[\x00-\x08\x0b-\x1f\x7f-\x9f]', ' ', 'g'), '\s+', ' ', 'g')))
+                            '[\x00-\x08\x0b-\x1f\x7f-\x9f]', ' ', 'g'), '[ \t\n\x0b\f\r]+', ' ', 'g')))
                         END) AS n_norm_distinct
             FROM documents
         """,
@@ -1897,7 +1899,7 @@ def oracle_sql() -> dict[str, str]:
                    CAST(COALESCE(SUM(CASE WHEN n > 1 THEN n ELSE 0 END), 0) AS BIGINT) AS n_dup_rows,
                    CAST(SUM(CASE WHEN n > 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_dup_groups
             FROM (
-                SELECT regexp_replace(LOWER(TRIM(text)), '\s+', ' ', 'g') AS norm_text,
+                SELECT regexp_replace(LOWER(TRIM(text)), '[ \t\n\x0b\f\r]+', ' ', 'g') AS norm_text,
                        COUNT(*) AS n
                 FROM documents GROUP BY 1
             )
@@ -1999,7 +2001,7 @@ def oracle_sql() -> dict[str, str]:
         """,
         "jaccard_exact_pairs": r"""
             WITH d AS (
-                SELECT doc_id, regexp_replace(LOWER(text), '\s+', ' ', 'g') AS norm
+                SELECT doc_id, regexp_replace(LOWER(text), '[ \t\n\x0b\f\r]+', ' ', 'g') AS norm
                 FROM documents WHERE doc_id % 2 = 0
             ), pos AS (
                 SELECT doc_id, norm,
@@ -2026,7 +2028,7 @@ def oracle_sql() -> dict[str, str]:
         "ngram_overlap_report": r"""
             WITH toks AS (
                 SELECT doc_id,
-                       list_filter(string_split_regex(LOWER(TRIM(text)), '\s+'),
+                       list_filter(string_split_regex(LOWER(TRIM(text)), '[ \t\n\x0b\f\r]+'),
                                    t -> t <> '') AS ts
                 FROM documents WHERE text IS NOT NULL
             ), idx8 AS (
@@ -2079,7 +2081,7 @@ def oracle_sql() -> dict[str, str]:
             ), normd AS (
                 SELECT doc_id, pos, ls[CAST(pos AS BIGINT)] AS line,
                        LOWER(TRIM(regexp_replace(regexp_replace(ls[CAST(pos AS BIGINT)],
-                           '[\x00-\x08\x0b-\x1f\x7f-\x9f]', ' ', 'g'), '\s+', ' ', 'g'))) AS k,
+                           '[\x00-\x08\x0b-\x1f\x7f-\x9f]', ' ', 'g'), '[ \t\n\x0b\f\r]+', ' ', 'g'))) AS k,
                        LENGTH(TRIM(ls[CAST(pos AS BIGINT)])) >= 8 AS elig
                 FROM lined
             ), hot AS (
@@ -2104,7 +2106,7 @@ def oracle_sql() -> dict[str, str]:
         """,
         "lsh_verified_pairs": r"""
             WITH d AS (
-                SELECT doc_id, regexp_replace(LOWER(text), '\s+', ' ', 'g') AS norm
+                SELECT doc_id, regexp_replace(LOWER(text), '[ \t\n\x0b\f\r]+', ' ', 'g') AS norm
                 FROM documents
             ), pos AS (
                 SELECT doc_id, norm,
@@ -2133,7 +2135,7 @@ def oracle_sql() -> dict[str, str]:
         # recursive CTE, labelled by component-min id, histogrammed by size.
         "dedup_cluster_sizes": r"""
             WITH RECURSIVE d AS (
-                SELECT doc_id, regexp_replace(LOWER(text), '\s+', ' ', 'g') AS norm
+                SELECT doc_id, regexp_replace(LOWER(text), '[ \t\n\x0b\f\r]+', ' ', 'g') AS norm
                 FROM documents
             ), pos AS (
                 SELECT doc_id, norm,
@@ -2293,7 +2295,7 @@ def oracle_sql() -> dict[str, str]:
         "vocab_coverage": r"""
             WITH toks AS (
                 SELECT UNNEST(list_filter(
-                    string_split_regex(LOWER(TRIM(text)), '\s+'),
+                    string_split_regex(LOWER(TRIM(text)), '[ \t\n\x0b\f\r]+'),
                     t -> t <> '')) AS tok
                 FROM documents WHERE text IS NOT NULL
             ), freq AS (
@@ -2397,7 +2399,7 @@ def oracle_sql() -> dict[str, str]:
         "document_chunks": r"""
             WITH toks AS (
                 SELECT doc_id, lang,
-                       list_filter(string_split_regex(LOWER(TRIM(text)), '\s+'),
+                       list_filter(string_split_regex(LOWER(TRIM(text)), '[ \t\n\x0b\f\r]+'),
                                    t -> t <> '') AS ts
                 FROM documents WHERE text IS NOT NULL
             ), starts AS (
@@ -2502,12 +2504,12 @@ def oracle_sql() -> dict[str, str]:
             WHERE 1 = 0
         """,
         # full DuckDB replica of the per-doc Gopher arithmetic: same token
-        # split (lower+trim, \s+, drop empties), same n-gram construction,
+        # split (lower+trim, Java's \s+, drop empties), same n-gram construction,
         # same clip-to-1 and empty/NULL fallbacks as functions/text.py
         "gopher_repetition": r"""
             WITH base AS (
                 SELECT lang, text, length(text) AS total,
-                       list_filter(regexp_split_to_array(lower(trim(text)), '\s+'), x -> x <> '') AS tokens,
+                       list_filter(regexp_split_to_array(lower(trim(text)), '[ \t\n\x0b\f\r]+'), x -> x <> '') AS tokens,
                        string_split(text, chr(10)) AS lines
                 FROM documents
             ), g AS (
@@ -2567,7 +2569,7 @@ def oracle_sql() -> dict[str, str]:
         # seq_len (64) whenever any partition holds a full sequence
         "packed_tokens": r"""
             WITH toks AS (
-                SELECT len(list_filter(regexp_split_to_array(text, '\s+'), x -> x <> '')) AS n
+                SELECT len(list_filter(regexp_split_to_array(text, '[ \t\n\x0b\f\r]+'), x -> x <> '')) AS n
                 FROM documents WHERE text IS NOT NULL
             )
             SELECT CAST(SUM(n + 1) AS BIGINT) AS total_tokens,

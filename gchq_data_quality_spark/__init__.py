@@ -8,6 +8,7 @@ computed in a single Spark job — plus the web-scale quality-filter additions
 runs) the reference does not ship.
 """
 
+from gchq_data_quality_spark import _zipimport  # noqa: F401  (first: patches zipimport)
 from gchq_data_quality_spark.config import DataQualityConfig, RuleAdapter, RuleType
 from gchq_data_quality_spark.engine import annotate, evaluate_rules
 from gchq_data_quality_spark.models import DamaFramework

@@ -1,8 +1,9 @@
 """SparkSession factory with the engine's required settings.
 
 Pins the session timezone to UTC (the reference's datetime semantics assume
-it, tests/spark/conftest.py:174), enables AQE + Arrow, and sizes shuffle
-partitions to the core count rather than the 200 default.
+it, tests/spark/conftest.py:174), enables AQE + Arrow, sizes shuffle
+partitions to the core count rather than the 200 default, and shrinks scan
+splits on local masters only.
 """
 
 from __future__ import annotations
@@ -38,29 +39,44 @@ def engine_conf() -> dict[str, str]:
         "spark.sql.adaptive.skewJoin.enabled": "true",
         "spark.sql.execution.arrow.pyspark.enabled": "true",
         "spark.sql.execution.arrow.maxRecordsPerBatch": "2048",
-        # Scan split sizing (r6, measured): the defaults (128 MB split, 4 MB
-        # open cost) read the 217 MB scaling table as ~10 partitions — at 8
-        # cores that is one full task wave plus a 2-task straggler wave (~20%
-        # idle; 2->8 pipeline efficiency 0.72), and an 11 MB single-file
-        # table scans as ~3 partitions on a 32-core session. 16 MB splits /
-        # 128 KB open cost give every leg 2+ task waves (8-core scaling leg
-        # 12.1 -> 10.1 s; pair efficiency 0.72 -> 0.87) without changing the
-        # 32-core headline scan (still 32 partitions; bytes-per-core binds).
-        # A parquet split reads only the row groups whose midpoint it holds,
-        # so 16 MB splits spread work only when row groups are <= 16 MB; a
-        # single-row-group file reads as ONE non-empty partition however
-        # many splits it gets (dedup._ensure_parallelism repartitions those).
-        # SCALE NOTE: these are local-mode values — on a real cluster with
-        # thousands of scan partitions, larger splits (256 MB - 1 GB) cut
-        # task-scheduling and shuffle-block overhead (guide §2.2/§6); both
-        # knobs are env-overridable for cluster deploys.
-        "spark.sql.files.maxPartitionBytes": os.environ.get(
-            "SPARK_GRAFT_MAX_PARTITION_BYTES", "16777216"
-        ),
-        "spark.sql.files.openCostInBytes": os.environ.get(
-            "SPARK_GRAFT_OPEN_COST_BYTES", "131072"
-        ),
     }
+
+
+# Scan split sizing (r6, measured): the defaults (128 MB split, 4 MB open
+# cost) read the 217 MB scaling table as ~10 partitions — at 8 cores that is
+# one full task wave plus a 2-task straggler wave (~20% idle; 2->8 pipeline
+# efficiency 0.72), and an 11 MB single-file table scans as ~3 partitions on
+# a 32-core session. 16 MB splits / 128 KB open cost give every leg 2+ task
+# waves (8-core scaling leg 12.1 -> 10.1 s; pair efficiency 0.72 -> 0.87)
+# without changing the 32-core headline scan (still 32 partitions;
+# bytes-per-core binds). A parquet split reads only the row groups whose
+# midpoint it holds, so 16 MB splits spread work only when row groups are
+# <= 16 MB; a single-row-group file reads as ONE non-empty partition however
+# many splits it gets (dedup._ensure_parallelism repartitions those).
+# These are local-mode values: on a cluster with thousands of scan
+# partitions, Spark's larger defaults cut task-scheduling and shuffle-block
+# overhead (guide §2.2/§6), so cluster masters keep them.
+LOCAL_SPLIT_CONF = {
+    "spark.sql.files.maxPartitionBytes": "16777216",
+    "spark.sql.files.openCostInBytes": "131072",
+}
+
+
+def apply_local_split_sizing(spark: SparkSession) -> None:
+    """Set ``LOCAL_SPLIT_CONF`` on a ``local``/``local[...]`` master's session,
+    for jobs whose master comes from spark-submit (``get_spark`` always runs
+    local and sets it in its builder).
+
+    A key the deploy set itself (in the SparkConf) is left alone, and any
+    other master keeps Spark's split defaults.
+    """
+    sc = spark.sparkContext
+    if not (sc.master == "local" or sc.master.startswith("local[")):
+        return
+    conf = sc.getConf()
+    for key, value in LOCAL_SPLIT_CONF.items():
+        if not conf.contains(key):
+            spark.conf.set(key, value)
 
 
 def get_spark(
@@ -86,8 +102,9 @@ def get_spark(
             ("-Duser.timezone=UTC " + os.environ.get("SPARK_GRAFT_JAVA_OPTS", "")).strip(),
         )
     )
-    for key, value in engine_conf().items():
-        builder = builder.config(key, value)
-    for key, value in (extra_conf or {}).items():
+    # the split sizing goes in the builder, not through
+    # apply_local_split_sizing: a session conf set builds the session state
+    # at once (0.3-0.5 s on 4 vCPUs), work the first query does otherwise
+    for key, value in {**engine_conf(), **LOCAL_SPLIT_CONF, **(extra_conf or {})}.items():
         builder = builder.config(key, value)
     return builder.getOrCreate()

@@ -69,7 +69,10 @@ def main(argv: list[str] | None = None) -> None:
         ngram_jaccard_pairs,
     )
     from gchq_data_quality_spark.sources.io import read_table, write_table
-    from gchq_data_quality_spark.sources.session import engine_conf
+    from gchq_data_quality_spark.sources.session import (
+        apply_local_split_sizing,
+        engine_conf,
+    )
 
     pre_existing = SparkSession.getActiveSession() is not None
     builder = SparkSession.builder.appName("neardup_dedup_job")
@@ -79,6 +82,7 @@ def main(argv: list[str] | None = None) -> None:
     if pre_existing:
         for key, value in engine_conf().items():
             spark.conf.set(key, value)
+    apply_local_split_sizing(spark)
     spark.sparkContext.setLogLevel("WARN")
 
     if args.synthetic:

@@ -144,7 +144,10 @@ def main(argv: list[str] | None = None) -> None:
     from gchq_data_quality_spark.pipeline import QualityFilterConfig, QualityFilterPipeline
     from gchq_data_quality_spark.sources.checkpoint import run_checkpointed
     from gchq_data_quality_spark.sources.io import read_table, write_table
-    from gchq_data_quality_spark.sources.session import engine_conf
+    from gchq_data_quality_spark.sources.session import (
+        apply_local_split_sizing,
+        engine_conf,
+    )
 
     # The engine's semantic invariants (UTC, non-ANSI, Arrow batching) must
     # hold on ANY cluster this job is submitted to — Spark 4.x defaults to
@@ -162,6 +165,7 @@ def main(argv: list[str] | None = None) -> None:
         # ANSI session one malformed row would otherwise abort the job.
         for key, value in engine_conf().items():
             spark.conf.set(key, value)
+    apply_local_split_sizing(spark)
     spark.sparkContext.setLogLevel("WARN")
 
     if args.synthetic:

@@ -151,3 +151,37 @@ def test_queries_order_keeps_oracle_backed_inside_driver_window():
     assert names[-1] == "minhash_candidates"  # restored signal, stays last
     # every oracle key must have a query (no orphaned SQL)
     assert set(ORACLE) <= set(QUERIES)
+
+
+# queries whose Spark side and oracle both read only `documents` and split or
+# collapse whitespace (packed_tokens' oracle fixes max_tokens at a full
+# 64-token sequence, which a handful of short texts never fills)
+_WHITESPACE_QUERIES = ["dedup_exact", "doc_token_quality", "gopher_repetition"]
+
+
+@pytest.mark.parametrize("name", _WHITESPACE_QUERIES)
+def test_oracle_whitespace_matches_java_on_vertical_tab(spark, tmp_path, name):
+    """Java's \\s (Spark's regexes) includes \\x0b and DuckDB's RE2 \\s does
+    not, so the oracles spell the class out; a vertical tab must normalise
+    the same on both sides."""
+    import pandas as pd
+
+    texts = ["a\x0bb", "a b", "A\x0b \tB c", "x\x0b\x0by z", "x y z", "\x0b", "p\fq\rr\nr"]
+    pd.DataFrame({
+        "doc_id": range(len(texts)),
+        "text": texts,
+        "lang": ["en"] * len(texts),
+        "source": ["s"] * len(texts),
+        "n_chars": [len(t) for t in texts],
+    }).to_parquet(tmp_path / "documents.parquet")
+    spark_df = QUERIES[name](spark, str(tmp_path))
+    spark_rows = [tuple(r) for r in spark_df.collect()]
+    con = duckdb.connect()
+    con.execute(
+        f"CREATE VIEW documents AS SELECT * FROM read_parquet('{tmp_path}/documents.parquet')"
+    )
+    result = con.execute(ORACLE[name])
+    duck_cols = [d[0] for d in result.description]
+    assert _rows_to_multiset(spark_df.columns, spark_rows) == _rows_to_multiset(
+        duck_cols, result.fetchall()
+    )
