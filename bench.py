@@ -108,30 +108,18 @@ def build_pipeline():
 
 
 def run_pipeline_once(spark, images_path: str, out_path: str) -> dict:
-    """Filtered+scrubbed output write + audit agg; returns timings.
+    """Filtered+scrubbed output write + audit; returns timings.
 
-    The pipeline is computed ONCE: the annotated table (flags + scrubbed
-    caption + passthrough bytes) is written, and the audit aggregates over
-    the written files — Catalyst prunes that scan down to the boolean flag
-    columns, so the audit costs a metadata-sized read, not a recompute of
-    the scoring UDFs.
+    ``QualityFilterPipeline.run`` with an output path: ONE Spark job, the
+    zstd parquet write of the annotated table (flags + scrubbed caption +
+    passthrough bytes) with the audit sums observed on it, so the audit
+    costs no scan of its own.
     """
     pipe = build_pipeline()
     images = spark.read.parquet(images_path)
     t0 = time.time()
-    annotated = pipe.annotate(images)
-    # zstd, not the snappy default: fastest end-to-end on this write
-    # (min-of-4 interleaved at sf0.1: 1.575 s vs 1.874 s total —
-    # scripts/exp_write_path.py) and the better 100-TB codec (ratio at
-    # similar CPU). Matches sources/io.write_table's default.
-    annotated.write.mode("overwrite").option("compression", "zstd").parquet(out_path)
-    write_sec = time.time() - t0
-    t1 = time.time()
-    report = pipe.audit(spark.read.parquet(out_path))
-    audit_sec = time.time() - t1
-    n_rules = len(report.results)
-    return {"write_sec": write_sec, "audit_sec": audit_sec,
-            "total_sec": write_sec + audit_sec, "n_rules": n_rules}
+    _, report = pipe.run(images, output_path=out_path)
+    return {"total_sec": time.time() - t0, "n_rules": len(report.results)}
 
 
 def run_pipeline_compute(spark, images_path: str) -> float:

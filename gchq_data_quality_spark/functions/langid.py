@@ -6,10 +6,11 @@ shape of fastText's langid models (embedding matmul + argmax), trained
 deterministically (no randomness anywhere: fixed hash, closed-form counts).
 
 Execution: training is a driver-side numpy pass over a (small, sampled)
-corpus; scoring is an Arrow-batched ``pandas_udf`` whose per-batch work is
-vectorised numpy (one concatenated byte array per batch — see hashing.py).
-The model rides to executors via sc.broadcast, per the north rule's
-"broadcast of rule/model artifacts".
+corpus; scoring runs in the library's one Arrow-batched ``pandas_udf``
+(scoring.scores_udf), whose per-batch work is ``score_batch``: vectorised
+numpy over one concatenated byte array per batch (see hashing.py). The
+model rides to executors via sc.broadcast, per the north rule's "broadcast
+of rule/model artifacts".
 """
 
 from __future__ import annotations
@@ -18,10 +19,8 @@ import io
 from dataclasses import dataclass
 
 import numpy as np
-import pandas as pd
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from gchq_data_quality_spark.functions.hashing import (
     batch_ngram_features,
@@ -29,7 +28,6 @@ from gchq_data_quality_spark.functions.hashing import (
     count_per_doc,
     reduce_per_doc,
 )
-from gchq_data_quality_spark.session_memo import MODEL_BROADCASTS
 
 # Byte bigrams + trigrams: the standard fastText-langid feature set.
 # Unigrams (single bytes) add ~50% more features for no measurable accuracy
@@ -140,48 +138,6 @@ def train_langid_from_documents(
     return train_langid([r[0] for r in rows], [r[1] for r in rows])
 
 
-# Per-worker-process decode cache: the serialized payload is decoded ONCE
-# per Python worker, not per task/batch. Keyed by a digest computed on the
-# driver (broadcast objects are deserialized fresh per task, so object
-# identity can't be the key).
-_MODEL_CACHE: dict[str, "LangIdModel"] = {}
-
-
-def _model_cache(digest: str, payload) -> "LangIdModel":
-    model = _MODEL_CACHE.get(digest)
-    if model is None:
-        model = LangIdModel.from_bytes(payload.value)
-        _MODEL_CACHE.clear()
-        _MODEL_CACHE[digest] = model
-    return model
-
-
-def langid_udf(spark: SparkSession, model: LangIdModel):
-    """Returns a pandas_udf: text -> struct<lang string, confidence double>.
-
-    The model is broadcast once per application (``MODEL_BROADCASTS``);
-    each Arrow batch is scored with vectorised numpy (no per-row Python).
-    """
-    sc = spark.sparkContext
-    digest = model.digest()
-    payload = MODEL_BROADCASTS.get(sc, ("langid", digest), lambda: sc.broadcast(model.to_bytes()))
-    schema = T.StructType(
-        [
-            T.StructField("lang", T.StringType()),
-            T.StructField("confidence", T.DoubleType()),
-        ]
-    )
-
-    @F.pandas_udf(schema)
-    def _langid(texts: pd.Series) -> pd.DataFrame:
-        local = _model_cache(digest, payload)
-        best, conf = local.score_batch(texts.tolist())
-        langs = [local.languages[i] if i >= 0 else None for i in best]
-        return pd.DataFrame({"lang": langs, "confidence": conf})
-
-    return _langid
-
-
 def with_langid(
     df: DataFrame,
     model: LangIdModel,
@@ -189,11 +145,11 @@ def with_langid(
     out_prefix: str = "",
 ) -> DataFrame:
     """Add ``lang`` and ``lang_confidence`` columns."""
-    spark = df.sparkSession
-    udf = langid_udf(spark, model)
-    struct_col: Column = udf(F.col(text_col))
+    from gchq_data_quality_spark.functions.scoring import scores_udf
+
+    udf = scores_udf(df.sparkSession, model)
     return (
-        df.withColumn("__langid", struct_col)
+        df.withColumn("__langid", udf(F.col(text_col)))
         .withColumn(f"{out_prefix}lang", F.col("__langid.lang"))
         .withColumn(f"{out_prefix}lang_confidence", F.col("__langid.confidence"))
         .drop("__langid")

@@ -7,9 +7,9 @@ fluent text in the training languages scores low. This is the text-quality
 signal the north rule pairs with a ValidityNumericalRangeRule on the ``ppl``
 column.
 
-Training is a deterministic numpy pass (no randomness); scoring is an
-Arrow-batched pandas_udf over broadcast count tables — same execution shape
-as langid.py.
+Training is a deterministic numpy pass (no randomness); scoring runs
+``score_batch`` over broadcast count tables inside the library's one
+Arrow-batched pandas_udf (scoring.scores_udf), as langid does.
 """
 
 from __future__ import annotations
@@ -18,10 +18,8 @@ import io
 from dataclasses import dataclass
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from gchq_data_quality_spark.functions.hashing import (
     batch_ngram_features,
@@ -29,7 +27,6 @@ from gchq_data_quality_spark.functions.hashing import (
     count_per_doc,
     reduce_per_doc,
 )
-from gchq_data_quality_spark.session_memo import MODEL_BROADCASTS
 
 DEFAULT_BUCKETS = 1 << 18
 VOCAB = 256.0  # byte alphabet for smoothing
@@ -114,36 +111,3 @@ def train_perplexity_from_documents(
         .collect()
     )
     return train_perplexity([r[0] for r in rows])
-
-
-# per-worker decode cache keyed by driver-computed digest (see langid.py)
-_MODEL_CACHE: dict[str, "PerplexityModel"] = {}
-
-
-def _model_cache(digest: str, payload) -> "PerplexityModel":
-    model = _MODEL_CACHE.get(digest)
-    if model is None:
-        model = PerplexityModel.from_bytes(payload.value)
-        _MODEL_CACHE.clear()
-        _MODEL_CACHE[digest] = model
-    return model
-
-
-def perplexity_udf(spark: SparkSession, model: PerplexityModel):
-    sc = spark.sparkContext
-    digest = model.digest()
-    payload = MODEL_BROADCASTS.get(sc, ("ppl", digest), lambda: sc.broadcast(model.to_bytes()))
-
-    @F.pandas_udf(T.DoubleType())
-    def _ppl(texts: pd.Series) -> pd.Series:
-        local = _model_cache(digest, payload)
-        return pd.Series(local.score_batch(texts.tolist()))
-
-    return _ppl
-
-
-def with_perplexity(
-    df: DataFrame, model: PerplexityModel, text_col: str = "caption", out_col: str = "ppl"
-) -> DataFrame:
-    udf = perplexity_udf(df.sparkSession, model)
-    return df.withColumn(out_col, udf(F.col(text_col)))

@@ -4,19 +4,21 @@ The north-rule pipeline over the image+caption table
 (image_id, bytes, w, h, fmt, caption, phash):
 
 1. **Derive** scoring columns in ONE projection: native text heuristics
-   (length, alpha ratio, repetition — pure Column exprs) plus the two
-   Arrow-batched pandas UDFs (langid, perplexity) with broadcast models.
+   (length, alpha ratio, repetition — pure Column exprs) plus ONE
+   Arrow-batched pandas UDF scoring whichever models are set (langid,
+   perplexity) with broadcast models.
 2. **Rules** over the derived columns reuse the engine's own rule chassis
    (ValidityNumericalRangeRule / AccuracyRule / CompletenessRule /
    ConsistencyRule) — each compiles to (evaluated, passing) Columns.
 3. **Annotate**: per-rule evaluated/passing boolean columns + the keep/drop
    combiner (keep = AND over (passing OR not-evaluated)) + caption_scrubbed
    via the compiled regexp chain. Image bytes pass through untouched.
-4. **Audit**: ONE observed job: the conditional sums over the flag columns
-   ride ``DataFrame.observe`` on a ``noop`` write of those columns, and each
-   task's partial sums merge on the driver -> one DataQualityResult row per
-   rule (same shape as the reference's DataQualityResult,
-   results/models.py:52-144).
+4. **Audit**: ONE observed job: the sums of the row-level audit counters
+   (``audit_counters``) ride ``DataFrame.observe`` on a ``noop`` write of
+   the flag columns — or, in ``run(df, output_path)``, on the output write
+   itself — and each task's partial sums merge on the driver -> one
+   DataQualityResult row per rule (same shape as the reference's
+   DataQualityResult, results/models.py:52-144).
 
 Scale design: the whole thing is a single stage, the audit included — no
 joins, no wide shuffle, no 1-row reduce. The Column plan (derived
@@ -41,8 +43,9 @@ from pyspark.sql import functions as F
 
 from gchq_data_quality_spark.functions import text as text_fns
 from gchq_data_quality_spark.functions.images import metadata_consistent
-from gchq_data_quality_spark.functions.langid import LangIdModel, langid_udf
-from gchq_data_quality_spark.functions.perplexity import PerplexityModel, perplexity_udf
+from gchq_data_quality_spark.functions.langid import LangIdModel
+from gchq_data_quality_spark.functions.perplexity import PerplexityModel
+from gchq_data_quality_spark.functions.scoring import scores_udf
 from gchq_data_quality_spark.functions.scrub import Scrubber
 from gchq_data_quality_spark.operators.accuracy import AccuracyRule
 from gchq_data_quality_spark.operators.base import BaseRule, CompiledRule
@@ -86,8 +89,8 @@ class _AnnotatePlan:
     caption: Column
     repartition: tuple[int, Column] | None  # (partitions, salted key)
     derived: dict[str, Column]
-    # (column, scoring UDF, {column: field of the UDF's struct} or None)
-    scorers: tuple
+    # (scoring UDF, {column: field of its struct}); None without models
+    scorer: tuple | None
     flags: dict[str, Column]
 
 
@@ -185,28 +188,18 @@ class QualityFilterPipeline:
             derived["meta_ok"] = metadata_consistent(
                 F.col("bytes"), F.col("w"), F.col("h"), F.col("fmt")
             )
-        spark = df.sparkSession
-        scorers = []
-        if self.langid_model is not None and self.ppl_model is not None:
-            # fused scorer: one Arrow round-trip for both models (scoring.py)
-            from gchq_data_quality_spark.functions.scoring import scores_udf
-
-            unpack = {
-                "lang": F.col("__scores.lang"),
-                "lang_confidence": F.col("__scores.confidence"),
-                "ppl": F.col("__scores.ppl"),
-            }
-            scorers.append(("__scores", scores_udf(spark, self.langid_model, self.ppl_model), unpack))
-        else:
+        scorer = None
+        if self.langid_model is not None or self.ppl_model is not None:
+            # one scorer: one Arrow round-trip for the models set (scoring.py)
+            unpack = {}
             if self.langid_model is not None:
-                unpack = {
-                    "lang": F.col("__lid.lang"),
-                    "lang_confidence": F.col("__lid.confidence"),
-                }
-                scorers.append(("__lid", langid_udf(spark, self.langid_model), unpack))
+                unpack["lang"] = F.col("__scores.lang")
+                unpack["lang_confidence"] = F.col("__scores.confidence")
             if self.ppl_model is not None:
-                scorers.append(("ppl", perplexity_udf(spark, self.ppl_model), None))
-        plan = _AnnotatePlan(caption, repartition, derived, tuple(scorers), flags={})
+                unpack["ppl"] = F.col("__scores.ppl")
+            udf = scores_udf(df.sparkSession, self.langid_model, self.ppl_model)
+            scorer = (udf, unpack)
+        plan = _AnnotatePlan(caption, repartition, derived, scorer, flags={})
         compiled = self._compiled(self._derive(plan, df))
 
         # `keep` references the flag EXPRESSIONS, not the added columns —
@@ -231,12 +224,12 @@ class QualityFilterPipeline:
         if plan.repartition is not None:
             df = df.repartition(*plan.repartition)
         df = df.withColumns(plan.derived)
-        for name, udf, unpack in plan.scorers:
+        if plan.scorer is not None:
+            udf, unpack = plan.scorer
             # a fresh UDF call per plan: a PythonUDF expression carries one
             # resultId, which two plans (or a union of them) must not share
-            df = df.withColumn(name, udf(plan.caption))
-            if unpack is not None:
-                df = df.withColumns(unpack).drop(name)
+            df = df.withColumn("__scores", udf(plan.caption))
+            df = df.withColumns(unpack).drop("__scores")
         return df
 
     def derive(self, df: DataFrame) -> DataFrame:
@@ -259,36 +252,41 @@ class QualityFilterPipeline:
         return self._derive(plan, df).withColumns(plan.flags)
 
     # ------------------------------------------------------------------
-    def _audit_plan(self, sc) -> tuple[list[str], list]:
-        """(flag columns, their aggregation exprs), memoised per
+    def _audit_plan(self, sc) -> tuple[list[str], dict[str, Column], list]:
+        """(flag columns, row-level counters, their sums), memoised per
         (application, config, which models are set) — what rules() reads."""
         key = ("audit", repr(self.config), self.langid_model is not None, self.ppl_model is not None)
         return _PLANS.get(sc, key, self._build_audit_plan)
 
-    def _build_audit_plan(self) -> tuple[list[str], list]:
-        cols, aggs = [], []
+    def _build_audit_plan(self) -> tuple[list[str], dict[str, Column], list]:
+        cols, counters = [], {}
         for rule in self.rules():
             rid = rule.rule_id
             evaluated, passing = f"dq_{rid}_evaluated", f"dq_{rid}_passing"
             cols += [evaluated, passing]
-            aggs.append(F.sum(F.col(evaluated).cast("long")).alias(f"e_{rid}"))
-            aggs.append(
-                F.sum((F.col(evaluated) & F.col(passing)).cast("long")).alias(f"p_{rid}")
-            )
+            counters[f"e_{rid}"] = F.col(evaluated)
+            counters[f"p_{rid}"] = F.col(evaluated) & F.col(passing)
         cols.append("keep")
-        aggs.append(F.sum(F.col("keep").cast("long")).alias("__kept"))
-        aggs.append(F.count(F.lit(1)).alias("__total"))
-        return cols, aggs
+        counters["__kept"] = F.col("keep")
+        counters["__total"] = F.lit(1)
+        aggs = [F.sum(value.cast("long")).alias(name) for name, value in counters.items()]
+        return cols, counters, aggs
+
+    def audit_counters(self) -> dict[str, Column]:
+        """The row-level audit counters over the flag columns: one boolean
+        (or 1) per e_/p_/__kept/__total name, whose sums are the audit.
+
+        Sums add up, so a caller running in batches (the checkpointed job
+        observes them per bucket) can add the per-batch sums and report
+        them with ``report_from_counts``. Built once per application and
+        config, like annotate's plan.
+        """
+        return dict(self._audit_plan(SparkSession.active().sparkContext)[1])
 
     def audit_agg_exprs(self) -> list:
-        """The flag-only aggregation exprs (one pass, map-side combinable).
-
-        Counts are plain sums, so callers running in batches (e.g. the
-        checkpointed job) can aggregate each batch's flags and ADD the rows
-        together — see ``report_from_counts``. Built once per application
-        and config, like annotate's plan.
-        """
-        return list(self._audit_plan(SparkSession.active().sparkContext)[1])
+        """The sums of ``audit_counters`` as aggregation exprs (one pass,
+        map-side combinable)."""
+        return list(self._audit_plan(SparkSession.active().sparkContext)[2])
 
     def report_from_counts(self, counts) -> DataQualityReport:
         """Build the per-rule report from an e_/p_/__kept/__total mapping
@@ -327,7 +325,7 @@ class QualityFilterPipeline:
         written output (the flags are plain columns) — the latter is the
         cheap path: a column-pruned boolean scan, no UDF re-execution.
         """
-        cols, aggs = self._audit_plan(annotated.sparkSession.sparkContext)
+        cols, _, aggs = self._audit_plan(annotated.sparkSession.sparkContext)
         observation = Observation()
         (
             annotated.select(*cols)
@@ -363,16 +361,24 @@ class QualityFilterPipeline:
     ) -> tuple[DataFrame, DataQualityReport]:
         """Annotate and audit WITHOUT running the scoring UDFs twice.
 
-        With ``output_path``: write the annotated frame once, then audit the
-        *written* flag columns (column-pruned boolean scan — the pattern
-        jobs/quality_filter_job.py uses); returns the re-read output.
+        With ``output_path``: ONE job — the audit sums are observed on the
+        zstd parquet write of the annotated frame (zstd as in
+        ``sources.io.write_table``); returns the lazy re-read of the output
+        (read with the written schema: no inference job).
         Without: persist the annotated frame so the audit materialises it and
         the returned DataFrame serves reads from the cache (caller unpersists).
         """
         annotated = self.annotate(df)
         if output_path is not None:
-            annotated.write.mode("overwrite").parquet(output_path)
-            written = df.sparkSession.read.parquet(output_path)
-            return written, self.audit(written)
+            observation = Observation()
+            aggs = self._audit_plan(df.sparkSession.sparkContext)[2]
+            (
+                annotated.observe(observation, *aggs)
+                .write.mode("overwrite")
+                .option("compression", "zstd")
+                .parquet(output_path)
+            )
+            written = df.sparkSession.read.schema(annotated.schema).parquet(output_path)
+            return written, self.report_from_counts(observation.get)
         annotated = annotated.persist()
         return annotated, self.audit(annotated)

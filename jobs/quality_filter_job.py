@@ -19,6 +19,12 @@ buckets (per-partition lineage lives in the manifest; output writes are
 idempotent dynamic partition overwrites). Models are trained once on the
 driver from --train-docs (or the built-in deterministic corpus) and broadcast.
 
+Each batch of buckets is ONE Spark write (two jobs with --dedup exact: the
+window's shuffle map stage, then the write). Every count the job keeps —
+rows written, duplicates dropped, the --keep-only audit counters — is
+observed per bucket on that write and lands in the bucket's completion
+record: no cache, no counting pre-pass, no re-read of the output.
+
 Local smoke run:
 
     python jobs/quality_filter_job.py --synthetic 2000 \
@@ -313,61 +319,54 @@ def main(argv: list[str] | None = None) -> None:
         )
         key_col = dedup_fp_col
 
-    # --keep-only drops failing rows from the output, so the audit CANNOT be
-    # computed from the written files (pass_rate would read ~1.0 and measure
-    # nothing). Instead each batch's pre-filter flags are aggregated PER
-    # BUCKET before the keep filter; the per-bucket counts are persisted in
-    # the manifest so a resumed run can merge the counts of buckets it
-    # skipped — the written audit always covers the WHOLE dataset, not just
-    # the re-processed slice. The batch is persisted so annotate's scoring
-    # UDFs still run exactly once (the agg materialises the cache, the write
-    # reads from it).
-    from gchq_data_quality_spark.sources.checkpoint import BUCKET_COL
+    # Every count below is observed per bucket on the batch's one write
+    # (run_checkpointed's ``observe``), on the annotated frame: above the
+    # dedup window's exchange and annotate's optional salt repartition, so
+    # a recomputed map stage cannot count a row twice. Each count lands in
+    # its bucket's completion record, written after the write succeeds: a
+    # resumed run adds the counts of the buckets it skips, and a crash
+    # loses no count of a completed bucket.
+    # - --dedup exact: the per-bucket min-id filter keeps the first row of
+    #   each caption group, and that keeper carries its group's size - 1 —
+    #   the rows the filter drops. Summing it on the annotated frame counts
+    #   the drops without evaluating the window a second time.
+    # - --keep-only drops failing rows from the output, so the audit CANNOT
+    #   be computed from the written files (pass_rate would read ~1.0 and
+    #   measure nothing): the audit counters are observed before the keep
+    #   filter, so the written audit covers the WHOLE input.
+    shuffle_partitions = int(spark.conf.get("spark.sql.shuffle.partitions"))
 
-    prefilter_by_bucket: dict[str, dict[str, int]] = {}
-    caches: list = []
-    run_manifest = CheckpointManifest(args.manifest)
+    def transform(part, observe):
+        from pyspark.sql import Window
+        from pyspark.sql import functions as F
 
-    def transform(part):
+        counters = {}
         if dedup_fp_col is not None:
-            from pyspark.sql import Window
-            from pyspark.sql import functions as F
-
             w = Window.partitionBy(dedup_fp_col).orderBy(config.id_col)
-            ranked = part.withColumn("__dq_dup_rn", F.row_number().over(w))
-            # one cheap extra pass (fingerprint + window over THIS batch's
-            # buckets only) buys exact per-bucket drop counts; persisted to
-            # the manifest PER BATCH — counts written only at end-of-run
-            # would be lost by a mid-run crash, and the resumed run cannot
-            # reconstruct them for buckets it skips
-            batch_drops = {
-                str(row[BUCKET_COL]): int(row["n"])
-                for row in ranked.filter(F.col("__dq_dup_rn") > 1)
-                .groupBy(BUCKET_COL)
-                .agg(F.count(F.lit(1)).alias("n"))
-                .collect()
-            }
-            if batch_drops:
-                run_manifest.merge_meta("dedup_dropped", batch_drops)
+            group = w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+            # the window's one exchange, with a fixed partition count: AQE
+            # coalesces a small batch's shuffle into ONE partition, and
+            # annotate's scoring UDF then runs on a single core
             part = (
-                ranked.filter(F.col("__dq_dup_rn") == 1)
+                part.repartition(shuffle_partitions, dedup_fp_col)
+                .withColumns(
+                    {
+                        "__dq_dup_rn": F.row_number().over(w),
+                        "__dq_dups": F.count(F.lit(1)).over(group) - 1,
+                    }
+                )
+                .filter(F.col("__dq_dup_rn") == 1)
                 .drop("__dq_dup_rn", dedup_fp_col)
             )
+            counters["duplicates_dropped"] = F.col("__dq_dups")
         out = pipe.annotate(part)
         if args.keep_only:
-            out = out.persist()
-            caches.append(out)
-            batch_counts: dict[str, dict[str, int]] = {}
-            for row in out.groupBy(BUCKET_COL).agg(*pipe.audit_agg_exprs()).collect():
-                counts = row.asDict()
-                bucket = str(counts.pop(BUCKET_COL))
-                batch_counts[bucket] = {k: int(v or 0) for k, v in counts.items()}
-            prefilter_by_bucket.update(batch_counts)
-            # persist per batch (same crash rationale as the dedup counts)
-            if batch_counts:
-                run_manifest.merge_meta("audit_counts", batch_counts)
+            counters.update(pipe.audit_counters())
+        if counters:
+            out = observe(out, counters)
+        if args.keep_only:
             out = out.filter("keep")
-        return out
+        return out.drop("__dq_dups")
 
     t0 = time.time()
     summary = run_checkpointed(
@@ -379,60 +378,40 @@ def main(argv: list[str] | None = None) -> None:
         n_buckets=args.n_buckets,
         buckets_per_batch=args.buckets_per_batch,
         resume=args.resume,
-        # keep-only runs stamp completed buckets "audited": their pre-filter
-        # counts were persisted (or the bucket had zero input rows — the agg
-        # yields no row for those, and the stamp is what distinguishes a
-        # legitimately-empty bucket from a legacy/non-keep-only bucket whose
-        # counts were never recorded)
-        bucket_meta={"audited": True} if args.keep_only else None,
     )
-    if dedup_fp_col is not None:
-        stored_drops = run_manifest.get_meta("dedup_dropped")
-        # whole-run total: completed buckets with no recorded entry dropped 0
-        summary["duplicates_dropped"] = sum(
-            int(stored_drops.get(str(b), 0))
-            for b in run_manifest.completed_buckets()
-        )
     elapsed = time.time() - t0
-    for cached in caches:
-        cached.unpersist(blocking=False)
+    completed = CheckpointManifest(args.manifest).load()["completed"]
+    if dedup_fp_col is not None:
+        # whole-run total; a record without the count reads as 0 dropped
+        summary["duplicates_dropped"] = sum(
+            record.get("counts", {}).get("duplicates_dropped", 0)
+            for record in completed.values()
+        )
 
     if args.keep_only:
-        manifest = CheckpointManifest(args.manifest)
-        stored = manifest.get_meta("audit_counts")
-        completed = {str(b) for b in sorted(manifest.completed_buckets())}
-        # a completed bucket with no stored counts is fine ONLY if it was
-        # completed by a keep-only run under the "audited" stamp (then the
-        # absence means zero input rows). A rows==0 bucket WITHOUT the stamp
-        # is ambiguous — under --keep-only a bucket whose rows were all
-        # dropped by the keep filter also writes 0 rows — so unstamped
-        # buckets are treated as missing, never as empty.
-        state_completed = manifest.load()["completed"]
-        missing = {
-            b
-            for b in completed - set(stored)
-            if not state_completed.get(b, {}).get("audited")
-        }
-        if completed and not missing:
-            totals: dict[str, int] = {}
-            for bucket in completed:
-                # empty buckets have no stored entry -> contribute zero
-                for key, value in stored.get(bucket, {}).items():
-                    totals[key] = totals.get(key, 0) + int(value or 0)
-            audit_df = pipe.report_to_df(spark, pipe.report_from_counts(totals))
-        else:
-            # a manifest written by an older run has no per-bucket counts for
-            # the skipped buckets: a rewrite would under-report the dataset,
-            # so keep the previously written audit and say so
-            if missing:
-                import warnings
+        names = pipe.audit_counters().keys()
+        missing = sorted(
+            b for b, record in completed.items()
+            if not names <= record.get("counts", {}).keys()
+        )
+        if missing:
+            # a bucket completed by an older or a non-keep-only run has no
+            # audit counts in its record: a rewrite would under-report the
+            # dataset, so keep the previously written audit and say so
+            import warnings
 
-                warnings.warn(
-                    f"audit counts missing for completed buckets {sorted(missing)}; "
-                    "keeping the existing audit table",
-                    stacklevel=1,
-                )
+            warnings.warn(
+                f"audit counts missing for completed buckets {missing}; "
+                "keeping the existing audit table",
+                stacklevel=1,
+            )
             audit_df = None
+        else:
+            totals = {
+                name: sum(record["counts"][name] for record in completed.values())
+                for name in names
+            }
+            audit_df = pipe.report_to_df(spark, pipe.report_from_counts(totals))
     else:
         # read_table, not spark.read.parquet: when --output is a catalog
         # table name, write_table went through Iceberg saveAsTable and a

@@ -144,9 +144,12 @@ def test_checkpoint_resume(spark, tmp_path, models):
     out_path = str(tmp_path / "out")
     manifest = str(tmp_path / "manifest.json")
 
+    def annotate(part, observe):
+        return pipe.annotate(part)
+
     first = run_checkpointed(
         df, out_path, manifest, key_col="image_id",
-        transform=pipe.annotate, n_buckets=4, buckets_per_batch=2,
+        transform=annotate, n_buckets=4, buckets_per_batch=2,
     )
     assert first["buckets_run"] == 4
     total_rows = spark.read.parquet(out_path).count()
@@ -155,7 +158,7 @@ def test_checkpoint_resume(spark, tmp_path, models):
     # resume: nothing left to do, output unchanged (idempotent)
     second = run_checkpointed(
         df, out_path, manifest, key_col="image_id",
-        transform=pipe.annotate, n_buckets=4, buckets_per_batch=2,
+        transform=annotate, n_buckets=4, buckets_per_batch=2,
     )
     assert second["buckets_run"] == 0
     assert second["buckets_skipped"] == 4
@@ -171,16 +174,61 @@ def test_checkpoint_resume(spark, tmp_path, models):
     (tmp_path / "manifest.json").write_text(json.dumps(state))
     third = run_checkpointed(
         df, out_path, manifest, key_col="image_id",
-        transform=pipe.annotate, n_buckets=4, buckets_per_batch=2,
+        transform=annotate, n_buckets=4, buckets_per_batch=2,
     )
     assert third["buckets_run"] == 2
     assert spark.read.parquet(out_path).count() == 400
 
 
+def test_checkpoint_leaves_session_overwrite_mode(spark, tmp_path):
+    """Dynamic partition overwrite is an option of the checkpointed write,
+    not a session conf: a static session stays static, and a re-run bucket
+    still replaces only its own partition."""
+    import json
+
+    key = "spark.sql.sources.partitionOverwriteMode"
+    before = spark.conf.get(key)
+    spark.conf.set(key, "STATIC")
+    try:
+        df = generate_images_df(spark, 200)
+        out_path, manifest = str(tmp_path / "out"), tmp_path / "manifest.json"
+        run_checkpointed(df, out_path, str(manifest), key_col="image_id", n_buckets=4)
+        assert spark.conf.get(key) == "STATIC"
+        state = json.loads(manifest.read_text())
+        state["completed"].pop("1")
+        manifest.write_text(json.dumps(state))
+        again = run_checkpointed(df, out_path, str(manifest), key_col="image_id", n_buckets=4)
+        assert again["buckets_run"] == 1
+        assert spark.conf.get(key) == "STATIC"
+        assert spark.read.parquet(out_path).count() == 200
+    finally:
+        spark.conf.set(key, before)
+
+
+def test_run_with_output_path_audits_on_its_write(spark, tmp_path, models):
+    """run(df, output_path) is ONE Spark job: the audit sums ride the
+    parquet write, and the returned re-read takes the written schema."""
+    pipe = _pipe(models)
+    df = generate_images_df(spark, 120)
+    sc = spark.sparkContext
+    sc.setJobGroup("dq-run-one-job", "run")
+    try:
+        written, report = pipe.run(df, output_path=str(tmp_path / "run_out"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup("dq-run-one-job")) == 1
+
+    def counts(rep):
+        return [(r.rule_id, r.records_evaluated, r.pass_rate, r.measurement_sample) for r in rep.results]
+
+    assert counts(report) == counts(pipe.audit(written))
+    assert report.results[0].measurement_sample.endswith("/total=120")
+
+
 def test_run_with_output_path_scores_once(spark, tmp_path, models):
-    """pipeline.run(df, output_path=...) must write once and audit the
-    WRITTEN flags: the audit side is a plain parquet scan with no Python
-    (Arrow UDF) stage, so the scoring UDFs execute exactly once."""
+    """pipeline.run(df, output_path=...) must write once and return the
+    WRITTEN rows: a plain parquet scan with no Python (Arrow UDF) stage, so
+    auditing or reading the output never runs the scoring UDFs again."""
     langid_model, ppl_model = models
     df = generate_images_df(spark, 120)
     pipe = QualityFilterPipeline(
@@ -191,7 +239,7 @@ def test_run_with_output_path_scores_once(spark, tmp_path, models):
     assert written.count() == 120
     assert {r.rule_id for r in report.results} >= {"caption_present", "lang_allowed"}
 
-    # the audit input (re-read output) contains no scoring stage
+    # an audit of the re-read output contains no scoring stage
     audit_plan = (
         written.agg(*pipe.audit_agg_exprs())._jdf.queryExecution()
         .executedPlan().toString()
@@ -321,6 +369,26 @@ def test_salted_repartition_keeps_rows(spark, models):
     salted = _pipe(models, salt=3, repartition_to=4).annotate(df)
     assert salted.rdd.getNumPartitions() == 4
     assert _sorted_rows(salted) == _sorted_rows(_pipe(models).annotate(df))
+
+
+def test_single_model_pipelines_score_like_the_two_model_one(spark, models):
+    """The one scorer with one model gives the same fields as with both;
+    perplexity's NaN (null or too-short caption) arrives as NULL."""
+    langid_model, ppl_model = models
+    config = QualityFilterConfig(allowed_langs=LANGUAGES)
+    df = generate_images_df(spark, 200)
+
+    def scored(langid, ppl, *cols):
+        frame = QualityFilterPipeline(config, langid, ppl).annotate(df)
+        return sorted(frame.select("image_id", *cols).collect())
+
+    both = scored(langid_model, ppl_model, "lang", "lang_confidence", "ppl")
+    lid = scored(langid_model, None, "lang", "lang_confidence")
+    ppl = scored(None, ppl_model, "ppl")
+    assert lid == [(r.image_id, r.lang, r.lang_confidence) for r in both]
+    assert ppl == [(r.image_id, r.ppl) for r in both]
+    assert any(r.ppl is None for r in ppl)
+    assert all(r.ppl is None or r.ppl == r.ppl for r in ppl)  # no NaN
 
 
 def test_scores_udf_broadcasts_models_once(spark, models, monkeypatch):

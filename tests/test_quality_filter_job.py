@@ -1,7 +1,8 @@
 """The spark-submit job end-to-end (in-process): default mode writes all
 rows + flags and audits the written output; --keep-only writes only kept
 rows but audits PRE-filter flags (ADVICE r1: auditing the filtered output
-read ~1.0 pass rates and measured nothing)."""
+read ~1.0 pass rates and measured nothing). Each batch is one write that
+observes every per-bucket count the job keeps."""
 
 from __future__ import annotations
 
@@ -88,17 +89,16 @@ def test_job_keep_only_resume_skips_everything(spark, tmp_path, capsys):
 def test_job_keep_only_partial_resume_audits_whole_dataset(spark, tmp_path, capsys):
     """ADVICE r2 (medium): after a partial failure + resume, the audit must
     cover ALL buckets — the re-processed ones AND the skipped ones (their
-    per-bucket counts persist in the manifest)."""
+    per-bucket counts persist in their completion records)."""
     out, audit, manifest = _run(tmp_path, ["--keep-only"])
     full = {r.rule_id: r for r in spark.read.parquet(str(audit)).collect()}
     assert full["caption_present"].records_evaluated == 400
 
-    # simulate a run that died after 2 of 4 buckets: drop two buckets from
-    # the manifest (completed + stored counts), as if they were never done
+    # simulate a run that died after 2 of 4 buckets: drop two buckets'
+    # completion records (and with them their counts), as if never done
     state = json.loads(Path(manifest).read_text())
     for bucket in ("2", "3"):
-        state["completed"].pop(bucket)
-        state["meta"]["audit_counts"].pop(bucket)
+        assert "e_caption_present" in state["completed"].pop(bucket)["counts"]
     Path(manifest).write_text(json.dumps(state))
 
     quality_filter_job.main(
@@ -129,9 +129,8 @@ def test_job_keep_only_legacy_manifest_keeps_audit(spark, tmp_path, capsys):
     before = spark.read.parquet(str(audit)).collect()
 
     state = json.loads(Path(manifest).read_text())
-    state.pop("meta")  # legacy manifest shape: no per-bucket counts...
     for entry in state["completed"].values():
-        entry.pop("audited", None)  # ...and no keep-only completion stamps
+        entry.pop("counts")  # legacy record shape: no per-bucket counts
     # one bucket re-runs, three are skipped with no stored counts
     state["completed"].pop("0")
     Path(manifest).write_text(json.dumps(state))
@@ -250,19 +249,19 @@ def test_job_dedup_toggle_on_resume_raises(spark, tmp_path, capsys):
         )
 
 
-def test_job_keep_only_unstamped_zero_row_bucket_warns(spark, tmp_path, capsys):
-    """ADVICE r3 (low): a completed bucket with rows==0 and NO keep-only
-    completion stamp is ambiguous — it may have had all its rows dropped by
-    the keep filter under a pre-stamp manifest — so its absent audit counts
-    must trigger the keep-existing-audit warning, never silent omission."""
+def test_job_keep_only_record_without_counts_warns(spark, tmp_path, capsys):
+    """ADVICE r3 (low): a completed bucket with rows==0 whose record has no
+    audit counts is ambiguous — it may have had all its rows dropped by the
+    keep filter under an older manifest — so its absent audit counts must
+    trigger the keep-existing-audit warning, never silent omission. (Every
+    bucket a keep-only run completes records its counts, 0 when empty.)"""
     out, audit, manifest = _run(tmp_path, ["--keep-only"])
     before = spark.read.parquet(str(audit)).collect()
 
     state = json.loads(Path(manifest).read_text())
     bucket = next(iter(state["completed"]))
-    state["completed"][bucket].pop("audited", None)  # pre-stamp manifest
     state["completed"][bucket]["rows"] = 0
-    state["meta"]["audit_counts"].pop(bucket, None)
+    state["completed"][bucket].pop("counts")
     Path(manifest).write_text(json.dumps(state))
 
     with pytest.warns(UserWarning, match="audit counts missing"):
@@ -280,6 +279,130 @@ def test_job_keep_only_unstamped_zero_row_bucket_warns(spark, tmp_path, capsys):
     capsys.readouterr()
     after = spark.read.parquet(str(audit)).collect()
     assert sorted(map(str, after)) == sorted(map(str, before))
+
+
+def _summary(capsys) -> dict:
+    return json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+
+
+def _audit_table(spark, audit) -> list:
+    return sorted(
+        (r.rule_id, r.records_evaluated, r.pass_rate, r.measurement_sample)
+        for r in spark.read.parquet(str(audit)).collect()
+    )
+
+
+def _written_ids(spark, out) -> list:
+    return sorted(r.image_id for r in spark.read.parquet(str(out)).select("image_id").collect())
+
+
+def test_job_keep_only_dedup_runs_two_spark_jobs_per_batch(spark, tmp_path, capsys, monkeypatch):
+    """One write per batch: the dedup window's shuffle map stage and the
+    write itself are the only Spark jobs — no cache fill, no counting
+    pre-pass, no re-read of the output."""
+    from gchq_data_quality_spark.sources import checkpoint
+
+    sc = spark.sparkContext
+    group = f"dq-job-batches-{tmp_path.name}"
+    run_checkpointed = checkpoint.run_checkpointed
+
+    def grouped(*args, **kwargs):
+        sc.setJobGroup(group, "checkpointed batches")
+        try:
+            return run_checkpointed(*args, **kwargs)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+
+    monkeypatch.setattr(checkpoint, "run_checkpointed", grouped)
+    _run(tmp_path, ["--keep-only", "--dedup", "exact"])  # 4 buckets, 2 per batch
+    assert _summary(capsys)["buckets_run"] == 4
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 2 * 2
+
+
+def _metrics_under_exchange(plan) -> tuple[int, list[str]]:
+    """(CollectMetrics nodes, those with an exchange above them) in a
+    physical plan, AQE wrappers unwrapped."""
+    found, under = [], []
+
+    def walk(node, below_exchange):
+        name = node.nodeName()
+        if name.startswith("AdaptiveSparkPlan"):
+            return walk(node.executedPlan(), below_exchange)
+        if name.endswith("QueryStage"):
+            return walk(node.plan(), True)
+        if name == "CollectMetrics":
+            found.append(node.name())
+            if below_exchange:
+                under.append(node.name())
+        below_exchange = below_exchange or "Exchange" in name
+        children = node.children()
+        for i in range(children.size()):
+            walk(children.apply(i), below_exchange)
+
+    walk(plan, False)
+    return len(found), under
+
+
+@pytest.mark.parametrize("extra", [[], ["--repartition-to", "4"]], ids=["plain", "salted"])
+def test_job_observations_sit_above_every_exchange(spark, tmp_path, capsys, monkeypatch, extra):
+    """An observation below an exchange would count a recomputed map
+    stage's rows twice: the job's counters and the write's row counts must
+    sit above the dedup window's exchange and annotate's salt repartition."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from gchq_data_quality_spark.sources.checkpoint import BUCKET_COL
+
+    written = []
+    parquet = DataFrameWriter.parquet
+
+    def recording(self, path, *args, **kwargs):
+        if BUCKET_COL in self._df.columns:
+            written.append(self._df)
+        return parquet(self, path, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", recording)
+    _run(tmp_path, ["--keep-only", "--dedup", "exact", *extra])
+    capsys.readouterr()
+    assert len(written) == 2  # one write per batch
+    for frame in written:
+        plan = frame._jdf.queryExecution().executedPlan()
+        n_metrics, under = _metrics_under_exchange(plan)
+        assert n_metrics == 2, plan.toString()  # the job's counters + rows
+        assert under == [], plan.toString()
+
+
+def test_job_crash_before_batch_record_resumes_to_same_result(spark, tmp_path, capsys, monkeypatch):
+    """A crash after batch 2's write but before its completion record:
+    the resumed run redoes that batch, and the output, the audit table and
+    the whole-run drop count equal an uninterrupted run's."""
+    from gchq_data_quality_spark.sources.checkpoint import CheckpointManifest
+
+    flags = ["--keep-only", "--dedup", "exact"]
+    (tmp_path / "whole").mkdir()
+    (tmp_path / "crash").mkdir()
+    out, audit, _ = _run(tmp_path / "whole", flags)
+    whole = _summary(capsys)
+
+    mark_done = CheckpointManifest.mark_done
+    calls = []
+
+    def crashing(self, records):
+        calls.append(sorted(records))
+        if len(calls) == 2:
+            raise RuntimeError("crash before batch 2 is recorded")
+        return mark_done(self, records)
+
+    monkeypatch.setattr(CheckpointManifest, "mark_done", crashing)
+    with pytest.raises(RuntimeError, match="batch 2"):
+        _run(tmp_path / "crash", flags)
+    monkeypatch.setattr(CheckpointManifest, "mark_done", mark_done)
+    out2, audit2, _ = _run(tmp_path / "crash", flags)
+    resumed = _summary(capsys)
+
+    assert resumed["buckets_run"] == 2 and resumed["buckets_skipped"] == 2
+    assert resumed["duplicates_dropped"] == whole["duplicates_dropped"] > 0
+    assert _written_ids(spark, out2) == _written_ids(spark, out)
+    assert _audit_table(spark, audit2) == _audit_table(spark, audit)
 
 
 def test_job_incremental_history_dedup_across_runs(spark, tmp_path, capsys):
