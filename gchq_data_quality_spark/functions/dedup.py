@@ -43,6 +43,7 @@ from gchq_data_quality_spark.functions.shingle_arrow import (
     shingle_frame,
 )
 from gchq_data_quality_spark.functions.text import fingerprint
+from gchq_data_quality_spark.sources.scan import parquet_row_groups
 
 # ---------------------------------------------------------------------------
 # Exact dedup
@@ -228,9 +229,8 @@ def _ensure_parallelism(df: DataFrame) -> DataFrame:
     and is left untouched.
 
     An input counts as under-partitioned when min(scan partitions, parquet
-    row groups) is below the target. A parquet byte-range split reads only
-    the row groups whose midpoint it holds, so a single-row-group file
-    scanned as 4 splits still feeds ONE task. Only the projected columns of
+    row groups) is below the target: a single-row-group file scanned as 4
+    splits still feeds ONE task (``sources.scan``). Only the projected columns of
     the caller (the id and the text) cross the added round-robin exchange.
 
     Probe order matters for cost: ``inputFiles()`` walks the logical plan's
@@ -253,47 +253,12 @@ def _ensure_parallelism(df: DataFrame) -> DataFrame:
     )
     if len(df.inputFiles()) >= target * factor:
         return df
-    relation = _parquet_relation(df)
-    if relation is not None and _parquet_row_groups(spark, relation, target) < target:
+    row_groups = parquet_row_groups(df, target)
+    if row_groups is not None and row_groups < target:
         return df.repartition(target)
     if df.rdd.getNumPartitions() < target:
         return df.repartition(target)
     return df
-
-
-def _parquet_relation(df: DataFrame):
-    """The JVM HadoopFsRelation when ``df`` is a Project/Filter chain over one
-    parquet file scan (the only shape whose scan tasks are bounded by the
-    files' row groups), else None."""
-    node = df._jdf.queryExecution().optimizedPlan()
-    while node.nodeName() in ("Project", "Filter"):
-        node = node.children().head()
-    if node.nodeName() != "LogicalRelation":
-        return None
-    relation = node.relation()
-    if relation.getClass().getSimpleName() != "HadoopFsRelation":
-        return None
-    return relation if relation.fileFormat().toString() == "Parquet" else None
-
-
-def _parquet_row_groups(spark, relation, stop_at: int) -> int:
-    """Row groups in the relation's files, read from the parquet footers
-    through the session's Hadoop filesystem; stops once ``stop_at`` are seen."""
-    jvm = spark._jvm
-    hadoop_conf = spark._jsparkSession.sessionState().newHadoopConf()
-    files = relation.location().allFiles().iterator()
-    total = 0
-    while total < stop_at and files.hasNext():
-        reader = jvm.org.apache.parquet.hadoop.ParquetFileReader.open(
-            jvm.org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(
-                files.next(), hadoop_conf
-            )
-        )
-        try:
-            total += reader.getRowGroups().size()
-        finally:
-            reader.close()
-    return total
 
 
 def minhash_signatures(
@@ -433,12 +398,19 @@ def ngram_jaccard_pairs(
     )
     a = shingled.select(F.col("id").alias("id_a"), F.col("sh").alias("sh_a"))
     b = shingled.select(F.col("id").alias("id_b"), F.col("sh").alias("sh_b"))
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    union = F.size("sh_a") + F.size("sh_b") - inter
+    # bind-once (text.repetition_ratio): the threshold filter is pushed into
+    # the join condition, where a plain expression would build the
+    # intersection's hash set twice (numerator and union) and the
+    # projection a third time; as a lambda variable it is built once per
+    # evaluation of the bound expression
+    jaccard = F.transform(
+        F.array(F.size(F.array_intersect("sh_a", "sh_b"))),
+        lambda inter: inter / (F.size("sh_a") + F.size("sh_b") - inter),
+    )[0]
     return (
         candidates.join(a, "id_a")
         .join(b, "id_b")
-        .withColumn("jaccard", inter / union)
+        .withColumn("jaccard", jaccard)
         .filter(F.col("jaccard") >= threshold)
         .select("id_a", "id_b", "jaccard")
     )

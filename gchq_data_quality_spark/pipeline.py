@@ -21,17 +21,21 @@ The north-rule pipeline over the image+caption table
    DataQualityResult, results/models.py:52-144).
 
 Scale design: the whole thing is a single stage, the audit included — no
-joins, no wide shuffle, no 1-row reduce. The Column plan (derived
-heuristics, rule flags, keep, caption_scrubbed) is built once per
-(``sc.applicationId``, input schema, config, model digests) and the audit
-sums once per (application, config), memoised in a ``SessionMemo``.
-Building them took ~2,360 py4j round trips per annotate() and ~890 per
-audit() (0.27-0.38 s and 0.20-0.29 s of driver time per warm call, 4k rows
-on 4 cores); a repeated call on a known schema — one per job batch, one
-per request of a long-lived session — makes ~100 of each. Optional salted
-repartition on the phash prefix defeats caption-duplication skew (hot phash
-clusters spread across ``salt`` buckets deterministically via
-xxhash64(image_id), no rand()).
+joins, no wide shuffle, no 1-row reduce. A parquet input of ONE row group,
+however many splits it reads as, is coalesced into one task (no exchange),
+so no empty task starts a scoring Python worker or writes a schema-only
+file; inputs of 2+ row groups, other sources and already-exchanged frames
+keep their partitioning, and the salted repartition below replaces it. The
+Column plan (derived heuristics, rule flags, keep, caption_scrubbed) is
+built once per (``sc.applicationId``, input schema, config, model digests)
+and the audit sums once per (application, config), memoised in a
+``SessionMemo``. Building them took ~2,360 py4j round trips per annotate()
+and ~890 per audit() (0.27-0.38 s and 0.20-0.29 s of driver time per warm
+call, 4k rows on 4 cores); a repeated call on a known schema — one per job
+batch, one per request of a long-lived session — makes ~100 of each.
+Optional salted repartition on the phash prefix defeats caption-duplication
+skew (hot phash clusters spread across ``salt`` buckets deterministically
+via xxhash64(image_id), no rand()).
 """
 
 from __future__ import annotations
@@ -58,6 +62,7 @@ from gchq_data_quality_spark.results import (
     calculate_pass_rate,
 )
 from gchq_data_quality_spark.session_memo import SessionMemo
+from gchq_data_quality_spark.sources.scan import parquet_row_groups
 
 # annotate plans and audit exprs, memoised per application (_plan and
 # _audit_plan say what each is keyed on)
@@ -223,6 +228,13 @@ class QualityFilterPipeline:
     def _derive(plan: _AnnotatePlan, df: DataFrame) -> DataFrame:
         if plan.repartition is not None:
             df = df.repartition(*plan.repartition)
+        elif parquet_row_groups(df, 2) == 1:
+            # one row group feeds one scan task however many splits the
+            # file reads as: fold the empty ones in (no exchange, the same
+            # rows in the same order) rather than spread the rows, which
+            # writes one parquet dictionary of the repeated image bytes per
+            # file (out/in bytes 1.25 -> 1.9 on 4 round-robin partitions)
+            df = df.coalesce(1)
         df = df.withColumns(plan.derived)
         if plan.scorer is not None:
             udf, unpack = plan.scorer

@@ -52,7 +52,8 @@ def engine_conf() -> dict[str, str]:
 # bytes-per-core binds). A parquet split reads only the row groups whose
 # midpoint it holds, so 16 MB splits spread work only when row groups are
 # <= 16 MB; a single-row-group file reads as ONE non-empty partition however
-# many splits it gets (dedup._ensure_parallelism repartitions those).
+# many splits it gets (sources/scan.py: the dedup kernel spreads those,
+# annotate folds them into one task).
 # These are local-mode values: on a cluster with thousands of scan
 # partitions, Spark's larger defaults cut task-scheduling and shuffle-block
 # overhead (guide §2.2/§6), so cluster masters keep them.

@@ -15,9 +15,12 @@ from __future__ import annotations
 
 import datetime as dt
 import math
+import os
 from pathlib import Path
 
 import pandas as pd
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 import yaml
 from pyspark.sql import types as T
@@ -33,6 +36,51 @@ def spark():
     session = get_spark(cores=4, app_name="dq-tests", shuffle_partitions=4)
     session.sparkContext.setLogLevel("ERROR")
     yield session
+
+
+@pytest.fixture
+def split_reads(spark):
+    """Read small files as several byte-range splits; restores the session."""
+    key = "spark.sql.files.maxPartitionBytes"
+    old = spark.conf.get(key)
+
+    def read(path):
+        spark.conf.set(key, str(os.path.getsize(path) // 6))
+        return spark.read.parquet(path)
+
+    yield read
+    spark.conf.set(key, old)
+
+
+def write_images_parquet(path, n_rows: int, row_group_size: int | None = None) -> str:
+    """Synthetic image+caption rows (the pipeline's input columns) written
+    by pyarrow: one row group unless ``row_group_size`` is given."""
+    from gchq_data_quality_spark.sources.synthetic import generate_rows
+
+    rows = generate_rows(n_rows)
+    table = pa.table(
+        {
+            "image_id": pa.array([r.image_id for r in rows], pa.string()),
+            "bytes": pa.array([r.bytes for r in rows], pa.binary()),
+            "w": pa.array([r.w for r in rows], pa.int32()),
+            "h": pa.array([r.h for r in rows], pa.int32()),
+            "fmt": pa.array([r.fmt for r in rows], pa.string()),
+            "caption": pa.array([r.caption for r in rows], pa.string()),
+            "phash": pa.array([r.phash for r in rows], pa.int64()),
+        }
+    )
+    pq.write_table(table, str(path), row_group_size=row_group_size)
+    return str(path)
+
+
+def stage_tasks(sc, group: str) -> list[list[int]]:
+    """Per job of job group ``group``, the task count of each of its stages,
+    read from the application's status store."""
+    tracker = sc.statusTracker()
+    return [
+        [tracker.getStageInfo(stage).numTasks for stage in tracker.getJobInfo(job).stageIds]
+        for job in sorted(tracker.getJobIdsForGroup(group))
+    ]
 
 
 def load_cases(name: str) -> list[dict]:

@@ -4,8 +4,6 @@ top-k must match a numpy oracle, IVF must agree with brute force on recall.
 
 from __future__ import annotations
 
-import os
-
 import numpy as np
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -676,20 +674,6 @@ def _write_corpus(path, row_group_size=None):
     table = pa.table({"doc_id": list(range(len(texts))), "text": texts})
     pq.write_table(table, str(path), row_group_size=row_group_size)
     return str(path)
-
-
-@pytest.fixture
-def split_reads(spark):
-    """Read small files as several byte-range splits; restores the session."""
-    key = "spark.sql.files.maxPartitionBytes"
-    old = spark.conf.get(key)
-
-    def read(path):
-        spark.conf.set(key, str(os.path.getsize(path) // 6))
-        return spark.read.parquet(path)
-
-    yield read
-    spark.conf.set(key, old)
 
 
 def _partitions_with_rows(df):

@@ -10,6 +10,7 @@
 from __future__ import annotations
 
 import numpy as np
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
@@ -24,6 +25,8 @@ from gchq_data_quality_spark.sources.synthetic import (
     generate_rows,
     training_corpus,
 )
+
+from .conftest import stage_tasks, write_images_parquet
 
 N_ROWS = 1500
 
@@ -369,6 +372,72 @@ def test_salted_repartition_keeps_rows(spark, models):
     salted = _pipe(models, salt=3, repartition_to=4).annotate(df)
     assert salted.rdd.getNumPartitions() == 4
     assert _sorted_rows(salted) == _sorted_rows(_pipe(models).annotate(df))
+
+
+# ---------------------------------------------------------------------------
+# scan shape: a one-row-group parquet input scores in one task
+# ---------------------------------------------------------------------------
+
+
+def _plan(df):
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def _grouped_write(spark, frame, out, group):
+    sc = spark.sparkContext
+    sc.setJobGroup(group, "annotate write")
+    try:
+        frame.write.mode("overwrite").parquet(str(out))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return stage_tasks(sc, group)
+
+
+def test_one_row_group_input_scores_in_one_task(spark, models, tmp_path, split_reads, monkeypatch):
+    """Only the split holding the row group's midpoint reads rows; the
+    empty splits' tasks are folded into it: one task, one data file, and
+    the rows the split-per-task plan writes, in the same order."""
+    from gchq_data_quality_spark import pipeline as pipeline_mod
+
+    df = split_reads(write_images_parquet(tmp_path / "one_rg.parquet", 300))
+    assert df.rdd.getNumPartitions() >= 2
+    pipe = _pipe(models)
+
+    tasks = _grouped_write(spark, pipe.annotate(df), tmp_path / "fitted", f"dq-fit-{tmp_path.name}")
+    assert tasks == [[1]]
+    files = sorted((tmp_path / "fitted").glob("part-*.parquet"))
+    assert len(files) == 1
+
+    # the split-per-task plan: every scan split runs its own task
+    monkeypatch.setattr(pipeline_mod, "parquet_row_groups", lambda frame, stop_at: None)
+    split = pipe.annotate(df)
+    assert "Coalesce" not in _plan(split)
+    tasks = _grouped_write(spark, split, tmp_path / "split", f"dq-split-{tmp_path.name}")
+    assert tasks == [[df.rdd.getNumPartitions()]]
+    assert pq.read_table(files[0]).to_pylist() == pq.read_table(tmp_path / "split").to_pylist()
+
+
+@pytest.mark.parametrize("shape", ["row_groups", "csv", "salted"])
+def test_other_inputs_keep_their_partitioning(spark, models, tmp_path, split_reads, shape):
+    """Several row groups feed several tasks, a non-parquet scan is not
+    bounded by row groups, and the salted repartition already places rows:
+    none of them is coalesced."""
+    if shape == "row_groups":
+        df = split_reads(write_images_parquet(tmp_path / "rg.parquet", 300, row_group_size=40))
+        annotated = _pipe(models).annotate(df)
+    elif shape == "csv":
+        csv = tmp_path / "captions.csv"
+        rows = generate_images_df(spark, 200).select("image_id", "caption")
+        rows.coalesce(1).write.option("header", True).csv(str(csv))
+        spark.conf.set("spark.sql.files.maxPartitionBytes", "4096")  # split_reads restores it
+        df = spark.read.option("header", True).csv(str(csv))
+        annotated = _pipe(models, check_image_metadata=False).annotate(df)
+    else:
+        df = split_reads(write_images_parquet(tmp_path / "one_rg.parquet", 300))
+        annotated = _pipe(models, salt=3, repartition_to=4).annotate(df)
+    assert "Coalesce" not in _plan(annotated)
+    expected = 4 if shape == "salted" else df.rdd.getNumPartitions()
+    assert annotated.rdd.getNumPartitions() == expected > 1
 
 
 def test_single_model_pipelines_score_like_the_two_model_one(spark, models):

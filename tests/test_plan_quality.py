@@ -325,6 +325,23 @@ def test_lsh_verify_runs_kernel_once_and_shuffles_ids_only(spark):
         assert not {"sh", "sh_a", "sh_b"} & set(cols), shuffles
 
 
+def test_lsh_verify_intersects_each_pair_once(spark):
+    """The threshold filter is pushed into the verify join's condition; the
+    jaccard expression binds |A∩B| to a lambda variable, so that condition
+    builds one intersection per pair instead of two (numerator and union),
+    and only ngram_jaccard_pairs's projected jaccard adds another."""
+    from gchq_data_quality_spark.functions.dedup import (
+        minhash_dedup,
+        ngram_jaccard_pairs,
+    )
+
+    docs = spark.read.parquet(f"{SF}/documents.parquet")
+    pairs = ngram_jaccard_pairs(docs, "text", "doc_id", threshold=0.7)
+    kept = minhash_dedup(docs, "text", "doc_id")
+    assert _plan(kept).count("array_intersect(") == 1, _plan(kept)
+    assert _plan(pairs).count("array_intersect(") <= 2, _plan(pairs)
+
+
 def test_anti_join_query_shape(spark):
     """customers_without_orders must plan the lapsed screen as a broadcast
     anti-join fed by an aggregated (distinct) custkey set, with the recency

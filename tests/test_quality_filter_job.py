@@ -16,14 +16,16 @@ sys.path.insert(0, str(Path(__file__).resolve().parent.parent / "jobs"))
 
 import quality_filter_job  # noqa: E402
 
+from .conftest import stage_tasks, write_images_parquet  # noqa: E402
 
-def _run(tmp_path, extra):
+
+def _run(tmp_path, extra, source=("--synthetic", "400")):
     out = tmp_path / "out"
     audit = tmp_path / "audit"
     manifest = tmp_path / "m.json"
     quality_filter_job.main(
         [
-            "--synthetic", "400",
+            *source,
             "--output", str(out),
             "--audit", str(audit),
             "--manifest", str(manifest),
@@ -296,14 +298,11 @@ def _written_ids(spark, out) -> list:
     return sorted(r.image_id for r in spark.read.parquet(str(out)).select("image_id").collect())
 
 
-def test_job_keep_only_dedup_runs_two_spark_jobs_per_batch(spark, tmp_path, capsys, monkeypatch):
-    """One write per batch: the dedup window's shuffle map stage and the
-    write itself are the only Spark jobs — no cache fill, no counting
-    pre-pass, no re-read of the output."""
+def _group_batches(monkeypatch, sc, group: str) -> None:
+    """Run the job's checkpointed batches (and nothing else) in job group
+    ``group``."""
     from gchq_data_quality_spark.sources import checkpoint
 
-    sc = spark.sparkContext
-    group = f"dq-job-batches-{tmp_path.name}"
     run_checkpointed = checkpoint.run_checkpointed
 
     def grouped(*args, **kwargs):
@@ -314,9 +313,34 @@ def test_job_keep_only_dedup_runs_two_spark_jobs_per_batch(spark, tmp_path, caps
             sc.setLocalProperty("spark.jobGroup.id", None)
 
     monkeypatch.setattr(checkpoint, "run_checkpointed", grouped)
+
+
+def test_job_keep_only_dedup_runs_two_spark_jobs_per_batch(spark, tmp_path, capsys, monkeypatch):
+    """One write per batch: the dedup window's shuffle map stage and the
+    write itself are the only Spark jobs — no cache fill, no counting
+    pre-pass, no re-read of the output."""
+    sc = spark.sparkContext
+    group = f"dq-job-batches-{tmp_path.name}"
+    _group_batches(monkeypatch, sc, group)
     _run(tmp_path, ["--keep-only", "--dedup", "exact"])  # 4 buckets, 2 per batch
     assert _summary(capsys)["buckets_run"] == 4
     assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 2 * 2
+
+
+def test_job_scores_a_one_row_group_input_in_one_task_per_batch(
+    spark, tmp_path, capsys, monkeypatch, split_reads
+):
+    """Default mode over a one-row-group file read as several splits: each
+    batch's write is one stage of ONE task, not one task per split (the
+    empty ones would each start a scoring Python worker)."""
+    path = write_images_parquet(tmp_path / "in.parquet", 400)
+    assert split_reads(path).rdd.getNumPartitions() >= 2
+    sc = spark.sparkContext
+    group = f"dq-job-one-rg-{tmp_path.name}"
+    _group_batches(monkeypatch, sc, group)
+    _run(tmp_path, [], source=("--input", path))  # 4 buckets, 2 per batch
+    assert _summary(capsys)["rows_written"] == 400
+    assert stage_tasks(sc, group) == [[1], [1]]
 
 
 def _metrics_under_exchange(plan) -> tuple[int, list[str]]:
