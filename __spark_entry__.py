@@ -858,8 +858,9 @@ def _q_lsh_verified_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _q_dedup_cluster_sizes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-duplicate CLUSTER structure, not just pairs: connected components
-    over the verified exact-Jaccard >= 0.7 pair graph (min-id label
-    propagation run to convergence), reported as a cluster-size histogram.
+    over the verified exact-Jaccard >= 0.7 pair graph (driver union-find
+    under the edge bound, star contraction above it), reported as a
+    cluster-size histogram.
     The DuckDB oracle recomputes the exact pairs and closes them with a
     recursive CTE — a driver hash-match attests LSH recall, the exact
     verifier, AND the component labelling in one signal."""

@@ -42,6 +42,7 @@ from gchq_data_quality_spark.functions.shingle_arrow import (
     band_bucket_structs,
     shingle_frame,
 )
+from gchq_data_quality_spark.functions.relational import connected_components
 from gchq_data_quality_spark.functions.text import fingerprint
 from gchq_data_quality_spark.sources.scan import parquet_row_groups
 
@@ -422,8 +423,7 @@ def minhash_dedup(
     id_col: str,
     threshold: float = 0.7,
     transitive: bool = False,
-    max_iters: int = 3,
-    exact: bool = False,
+    exact: bool = True,
     **kwargs,
 ) -> DataFrame:
     """Drop near-duplicates, keeping one representative per duplicate group.
@@ -433,66 +433,29 @@ def minhash_dedup(
     common duplicate-cluster shapes, but a chain A~B~C where the middle doc
     has the largest id keeps both local minima (A and C survive).
 
-    ``transitive=True``: bounded min-id label propagation over the verified
-    pair graph — ``max_iters`` rounds of (edge join -> min per node), so ids
-    up to ``max_iters`` hops from their component's minimum are labelled with
-    it; only the component-global minimum survives. Real duplicate chains are
-    shallow (boilerplate clusters are near-cliques), so 3 rounds covers them;
-    each round shuffles only the pair graph (the near-dup edges, orders of
-    magnitude smaller than the corpus), not the data. The verified pairs are
-    localCheckpoint-ed first — the edge list is referenced by every round
-    plus the final anti-join, and without materialisation each reference
-    embeds the whole LSH + exact-verify subtree in the plan (exchange reuse
-    across AQE stages is not guaranteed), re-running the most expensive
-    stage of the job several times.
+    ``transitive=True``: the FULL closure of the verified pair graph via
+    relational.connected_components; only each component's minimum id
+    survives, however deep the chain. Typical near-dup graphs collect into
+    a driver union-find; huge ones run star contraction. The pairs are not
+    checkpointed here: connected_components checkpoints its own canonical
+    edge list.
 
-    ``transitive=True, exact=True``: run the FULL closure via
-    relational.connected_components instead of bounded propagation — the
-    hybrid dispatcher makes this cheap for typical near-dup graphs (small
-    graphs collect into a union-find; huge ones run the distributed
-    algorithms), so pick it whenever chains deeper than ``max_iters`` hops
-    are plausible. The pairs are not checkpointed here: the dispatcher
-    checkpoints its own canonical edge list.
+    ``exact`` is kept for callers that pass ``exact=True``; the bounded
+    propagation ``exact=False`` selected is gone, and asking for it raises.
     """
+    if transitive and not exact:
+        raise ValueError(
+            "minhash_dedup(transitive=True, exact=False): bounded label "
+            "propagation was removed; transitive=True is always the exact "
+            "closure"
+        )
     pairs = ngram_jaccard_pairs(df, text_col, id_col, threshold, **kwargs)
     if not transitive:
         # representative = min neighbour id (one hop)
         losers = pairs.select(F.col("id_b").alias(id_col)).distinct()
         return df.join(losers, id_col, "left_anti")
 
-    if exact:
-        from gchq_data_quality_spark.functions.relational import (
-            connected_components,
-        )
-
-        labels = connected_components(pairs)
-        losers = labels.filter(F.col("label") != F.col("id")).select(
-            F.col("id").alias(id_col)
-        )
-        return df.join(losers, id_col, "left_anti")
-
-    pairs = pairs.localCheckpoint()
-    # symmetric edge list over only the ids that appear in some pair
-    edges = pairs.select(
-        F.col("id_a").alias("src"), F.col("id_b").alias("dst")
-    ).union(pairs.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst")))
-    labels = (
-        edges.select(F.col("src").alias("id")).distinct()
-        .withColumn("label", F.col("id"))
-    )
-    for _ in range(max_iters):
-        neighbour_min = (
-            edges.join(labels, edges.src == labels.id)
-            .groupBy(F.col("dst").alias("id"))
-            .agg(F.min("label").alias("nmin"))
-        )
-        labels = (
-            labels.join(neighbour_min, "id", "left")
-            .select(
-                "id",
-                F.least(F.col("label"), F.coalesce("nmin", "label")).alias("label"),
-            )
-        )
+    labels = connected_components(pairs)
     losers = labels.filter(F.col("label") != F.col("id")).select(
         F.col("id").alias(id_col)
     )
@@ -675,8 +638,8 @@ def embedding_dedup_pairs(
 ) -> DataFrame:
     """Cosine near-duplicate pairs via random-hyperplane LSH.
 
-    Hyperplanes are deterministic pseudo-random unit-ish vectors derived from
-    xxhash64 of (plane, dim) — no RNG state, same buckets every run. Bucket =
+    Hyperplanes are deterministic pseudo-random unit-ish vectors of
+    ``plane_weight(plane, dim)`` — no RNG state, same buckets every run. Bucket =
     sign pattern per band; verification = exact cosine on candidates, run
     inside the within-bucket pair expansion (no self-join: the join's two
     lineages would each recompute the n_planes dot products per row, and an
@@ -693,14 +656,6 @@ def embedding_dedup_pairs(
     """
     dim = len(df.select(vec_col).first()[0])
     planes_per_band = n_planes // bands
-
-    def plane_weight(p: int, d: int) -> float:
-        # deterministic pseudo-random in [-1, 1): splitmix-style integer mix
-        h = (p * 2654435761 + d * 40503) & 0xFFFFFFFF
-        h = (h ^ (h >> 16)) * 2246822519 & 0xFFFFFFFF
-        h = (h ^ (h >> 13)) & 0xFFFFFFFF
-        return (h / 0x80000000) - 1.0
-
     vec = F.col(vec_col)
     sign_bits = []
     for p in range(n_planes):

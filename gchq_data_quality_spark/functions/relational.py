@@ -174,60 +174,42 @@ def bucketed_range_join(
     )
 
 
+# Above this many canonical edges connected_components runs star
+# contraction; at or below it, the driver union-find over the collected edges
+_SMALL_GRAPH_EDGES = 100_000
+# star contraction converges in O(log n) rounds (a depth-63 chain in <= 10),
+# so a fixed bound replaces a tuning knob; exceeding it raises
+_MAX_ROUNDS = 20
+
+
 def connected_components(
-    pairs: DataFrame,
-    id_a: str = "id_a",
-    id_b: str = "id_b",
-    max_iters: int = 20,
-    strict: bool = True,
-    method: str = "minid",
-    small_graph_edges: int = 100_000,
+    pairs: DataFrame, id_a: str = "id_a", id_b: str = "id_b"
 ) -> DataFrame:
     """Exact connected components of an undirected edge list: (id, label)
     with ``label`` = the smallest id in the node's component.
 
-    Hybrid execution: the edge list is materialised once (every strategy
-    needs that anyway) and its first ``small_graph_edges + 1`` rows are
-    collected; at or below ``small_graph_edges`` edges the
-    components are solved by a driver-side union-find over the collected
-    edges — a bounded collect (the threshold caps driver memory at a few
-    MB) that replaces 10-20 tiny shuffle rounds with one pass, the right
-    call whenever the near-dup graph is orders of magnitude smaller than
-    the corpus (the common case: 256 edges at sf0.1 cost 1.7 s of round
-    overhead distributed, ~0.2 s collected). Above the threshold the
-    distributed algorithms below run unchanged; pass
-    ``small_graph_edges=0`` to force them (the regression tests do).
-
-    ``method="minid"`` (default): min-id label propagation run to
-    CONVERGENCE (unlike minhash_dedup's bounded variant): each round joins
-    labels across edges and takes the min; stops when no label changed.
-    Rounds needed = graph DIAMETER; each round shuffles only the edge list
-    (the near-dup graph, orders of magnitude smaller than the corpus). The
-    convergence probe is a 1-row count, and each round's result is
-    localCheckpoint-ed so lineage (and recomputation) stays O(1) per round.
-    The right default for near-dup clusters, which are shallow near-cliques
-    (diameter 2-3).
-
-    ``method="star"``: alternating large-star/small-star contractions
-    (Kiveris et al., "Connected Components in MapReduce and Beyond") —
-    converges in O(log n) rounds regardless of diameter, the difference
-    between 6 and 60 shuffles on a pathological chain at 100x scale. Same
-    output contract; pick it when components may be long paths (temporal
-    chains, linkage graphs).
-
-    ``strict=True`` (default) raises RuntimeError if still converging
-    after ``max_iters`` rounds — silently returning split components would
-    corrupt every downstream dedup decision. Pass ``strict=False`` to
-    accept bounded propagation (minhash_dedup-style; minid only).
+    ONE engine, two execution paths chosen by the edge count: the
+    canonical edge list is materialised once and its first
+    ``_SMALL_GRAPH_EDGES + 1`` rows are collected. At or below
+    ``_SMALL_GRAPH_EDGES`` edges a driver-side union-find solves the
+    components over the collected edges — a bounded collect (the bound
+    caps driver memory at a few MB) that replaces 10-20 tiny shuffle
+    rounds with one pass, the common case whenever the near-dup graph is
+    orders of magnitude smaller than the corpus (256 edges at sf0.1 cost
+    1.7 s of round overhead distributed, ~0.2 s collected). Above it,
+    alternating large-star/small-star contraction (Kiveris et al.,
+    "Connected Components in MapReduce and Beyond") runs distributed: it
+    converges in O(log n) rounds on any graph shape, so long chains cost
+    a handful of rounds, not one per hop. It raises RuntimeError if still
+    converging after ``_MAX_ROUNDS`` rounds — silently returning split
+    components would corrupt every downstream dedup decision.
     """
-    if method not in ("minid", "star"):
-        raise ValueError(f"unknown method {method!r}: use 'minid' or 'star'")
-    # materialise the CANONICAL edge list ONCE: every strategy iterates
-    # over it, and without the checkpoint each round would re-run the whole
+    # materialise the CANONICAL edge list ONCE: both paths read it, and
+    # without the checkpoint each star round would re-run the whole
     # upstream pipeline that produced the pairs (e.g. LSH + exact
     # verification — measured 3x the total query cost at sf0.1). One
-    # bounded collect of small_graph_edges + 1 rows (local data) decides
-    # the small-graph dispatch and, when small, IS the driver's edge list.
+    # bounded collect of _SMALL_GRAPH_EDGES + 1 rows (local data) decides
+    # the dispatch and, when small, IS the driver's edge list.
     canon = (
         pairs.select(
             F.greatest(F.col(id_a), F.col(id_b)).alias("hi"),
@@ -237,50 +219,10 @@ def connected_components(
         .distinct()
         .localCheckpoint()
     )
-    head = canon.limit(small_graph_edges + 1).collect()
-    if len(head) <= small_graph_edges:
+    head = canon.limit(_SMALL_GRAPH_EDGES + 1).collect()
+    if len(head) <= _SMALL_GRAPH_EDGES:
         return _connected_components_driver(canon, head)
-    if method == "star":
-        return _connected_components_star(canon, max_iters, strict)
-    edges = (
-        canon.select(F.col("hi").alias("src"), F.col("lo").alias("dst"))
-        .union(canon.select(F.col("lo").alias("src"), F.col("hi").alias("dst")))
-    )
-    labels = (
-        edges.select(F.col("src").alias("id"))
-        .distinct()
-        .withColumn("label", F.col("id"))
-        .localCheckpoint()
-    )
-    n_changed = 0
-    for _ in range(max_iters):
-        neighbour_min = (
-            edges.join(labels, edges.src == labels.id)
-            .groupBy(F.col("dst").alias("id"))
-            .agg(F.min("label").alias("nmin"))
-        )
-        updated = (
-            labels.join(neighbour_min, "id", "left")
-            .select(
-                "id",
-                F.least(
-                    F.col("label"), F.coalesce("nmin", "label")
-                ).alias("label"),
-                (F.col("nmin") < F.col("label")).alias("__changed"),
-            )
-            .localCheckpoint()
-        )
-        n_changed = updated.filter(F.col("__changed")).limit(1).count()
-        labels = updated.drop("__changed")
-        if n_changed == 0:
-            break
-    if strict and n_changed != 0:
-        raise RuntimeError(
-            f"connected_components did not converge in {max_iters} rounds "
-            "(component diameter exceeds max_iters); raise max_iters or "
-            "pass strict=False to accept bounded propagation"
-        )
-    return labels
+    return _connected_components_star(canon)
 
 
 def _connected_components_driver(canon: DataFrame, rows: list) -> DataFrame:
@@ -331,9 +273,7 @@ def _star_checksum(edges: DataFrame) -> tuple[int, int]:
     return int(row["n"]), int(row["x"])
 
 
-def _connected_components_star(
-    canon: DataFrame, max_iters: int, strict: bool
-) -> DataFrame:
+def _connected_components_star(canon: DataFrame) -> DataFrame:
     """Alternating large-star / small-star contraction. Edges are kept
     CANONICAL (hi > lo) throughout — both operations preserve that
     orientation because every emitted edge points a node at a value no
@@ -354,8 +294,7 @@ def _connected_components_star(
     already-checkpointed canonical (hi > lo, distinct) edge frame."""
     edges = canon
     checksum = _star_checksum(edges)
-    converged = False
-    for _ in range(max_iters):
+    for _ in range(_MAX_ROUNDS):
         # ---- large-star ----
         bidir = edges.select(
             F.col("hi").alias("u"), F.col("lo").alias("v")
@@ -389,13 +328,11 @@ def _connected_components_star(
         )
         new_checksum = _star_checksum(edges)
         if new_checksum == checksum:
-            converged = True
             break
         checksum = new_checksum
-    if strict and not converged:
+    else:
         raise RuntimeError(
-            f"connected_components(method='star') did not converge in "
-            f"{max_iters} rounds; raise max_iters"
+            f"connected_components did not converge in {_MAX_ROUNDS} rounds"
         )
     return edges.select(F.col("hi").alias("id"), F.col("lo").alias("label")).union(
         edges.select(F.col("lo").alias("id"), F.col("lo").alias("label"))

@@ -89,7 +89,7 @@ class QualityFilterConfig:
 @dataclass(frozen=True)
 class _AnnotatePlan:
     """Every Column annotate() applies. Only the scoring UDF calls are made
-    per annotate() call (see ``_derive``)."""
+    per annotate() call (see ``_columns``)."""
 
     caption: Column
     repartition: tuple[int, Column] | None  # (partitions, salted key)
@@ -205,7 +205,7 @@ class QualityFilterPipeline:
             udf = scores_udf(df.sparkSession, self.langid_model, self.ppl_model)
             scorer = (udf, unpack)
         plan = _AnnotatePlan(caption, repartition, derived, scorer, flags={})
-        compiled = self._compiled(self._derive(plan, df))
+        compiled = self._compiled(self._columns(plan, df))
 
         # `keep` references the flag EXPRESSIONS, not the added columns —
         # identical values, and the flags are cheap boolean exprs over
@@ -225,16 +225,23 @@ class QualityFilterPipeline:
         return replace(plan, flags=flags)
 
     @staticmethod
-    def _derive(plan: _AnnotatePlan, df: DataFrame) -> DataFrame:
+    def _fit(plan: _AnnotatePlan, df: DataFrame) -> DataFrame:
+        """The input's partitioning for the scoring stage. Only derive() and
+        annotate() apply it: typing the rule columns needs no fit, and the
+        footer probe is a file open per call."""
         if plan.repartition is not None:
-            df = df.repartition(*plan.repartition)
-        elif parquet_row_groups(df, 2) == 1:
+            return df.repartition(*plan.repartition)
+        if parquet_row_groups(df, 2) == 1:
             # one row group feeds one scan task however many splits the
             # file reads as: fold the empty ones in (no exchange, the same
             # rows in the same order) rather than spread the rows, which
             # writes one parquet dictionary of the repeated image bytes per
             # file (out/in bytes 1.25 -> 1.9 on 4 round-robin partitions)
-            df = df.coalesce(1)
+            return df.coalesce(1)
+        return df
+
+    @staticmethod
+    def _columns(plan: _AnnotatePlan, df: DataFrame) -> DataFrame:
         df = df.withColumns(plan.derived)
         if plan.scorer is not None:
             udf, unpack = plan.scorer
@@ -246,7 +253,8 @@ class QualityFilterPipeline:
 
     def derive(self, df: DataFrame) -> DataFrame:
         """Add scoring columns (one projection; UDFs batched via Arrow)."""
-        return self._derive(self._plan(df), df)
+        plan = self._plan(df)
+        return self._columns(plan, self._fit(plan, df))
 
     def _compiled(self, df: DataFrame) -> list[CompiledRule]:
         dtypes = {f.name: f.dataType for f in df.schema.fields}
@@ -261,7 +269,7 @@ class QualityFilterPipeline:
         the derive steps, then ONE withColumns of the flags (one analyzer
         pass instead of ~18). A changed config or model is a new key."""
         plan = self._plan(df)
-        return self._derive(plan, df).withColumns(plan.flags)
+        return self._columns(plan, self._fit(plan, df)).withColumns(plan.flags)
 
     # ------------------------------------------------------------------
     def _audit_plan(self, sc) -> tuple[list[str], dict[str, Column], list]:

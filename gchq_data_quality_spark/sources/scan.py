@@ -10,7 +10,7 @@ leaves 3 tasks empty. Two callers fit their stage to that:
   row groups are fewer than the session's parallelism;
 - ``pipeline.QualityFilterPipeline`` runs annotate's scoring stage as one
   task over a one-row-group input, because its partitions become output
-  files (see ``_derive``).
+  files (see ``_fit``).
 """
 
 from __future__ import annotations

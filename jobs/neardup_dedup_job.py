@@ -12,7 +12,7 @@ output to the quality filter:
         --input  <parquet/iceberg of (id, text, ...)> \
         --output <deduped table> \
         --text-col caption --id-col image_id \
-        --threshold 0.7 --transitive --exact
+        --threshold 0.7 --transitive
 
     spark-submit ... jobs/quality_filter_job.py --input <deduped table> ...
 
@@ -25,7 +25,7 @@ functions/relational.py).
 Local smoke run:
 
     python jobs/neardup_dedup_job.py --synthetic 500 \
-        --output /tmp/nd_out --threshold 0.7 --transitive --exact
+        --output /tmp/nd_out --threshold 0.7 --transitive
 """
 
 from __future__ import annotations
@@ -47,12 +47,8 @@ def parse_args(argv: list[str]) -> argparse.Namespace:
     p.add_argument("--threshold", type=float, default=0.7,
                    help="exact n-gram Jaccard threshold for the verify stage")
     p.add_argument("--transitive", action="store_true",
-                   help="label propagation over the verified pair graph "
+                   help="connected components over the verified pair graph "
                         "(default: single-hop min-neighbour drop)")
-    p.add_argument("--exact", action="store_true",
-                   help="with --transitive: full closure via the hybrid "
-                        "connected-components instead of bounded 3-hop "
-                        "propagation")
     p.add_argument("--report-pairs", action="store_true",
                    help="also print the verified near-dup pair count "
                         "(one extra pass over the pair pipeline)")
@@ -62,7 +58,7 @@ def parse_args(argv: list[str]) -> argparse.Namespace:
 def main(argv: list[str] | None = None) -> None:
     args = parse_args(argv if argv is not None else sys.argv[1:])
 
-    from pyspark.sql import SparkSession
+    from pyspark.sql import Observation, SparkSession
 
     from gchq_data_quality_spark.functions.dedup import (
         minhash_dedup,
@@ -103,15 +99,6 @@ def main(argv: list[str] | None = None) -> None:
     null_rows = df.filter(text.isNull())
     candidates_df = df.filter(text.isNotNull())
 
-    if args.exact and not args.transitive:
-        # minhash_dedup's non-transitive branch returns before the exact-
-        # closure check, so --exact alone would be silently ignored
-        # (ADVICE r4) — full closure only makes sense over the pair graph,
-        # so --exact implies --transitive
-        print("--exact implies --transitive; enabling transitive closure",
-              file=sys.stderr)
-        args.transitive = True
-
     t0 = time.time()
     n_pairs = None
     if args.report_pairs:
@@ -124,13 +111,18 @@ def main(argv: list[str] | None = None) -> None:
         args.id_col,
         threshold=args.threshold,
         transitive=args.transitive,
-        exact=args.exact,
     ).unionByName(null_rows)
-    write_table(kept, args.output, mode="overwrite")
+    # rows_out is observed on the one write, not re-read from --output
+    written = Observation()
+    write_table(
+        kept.observe(written, F.count(F.lit(1)).alias("rows")),
+        args.output,
+        mode="overwrite",
+    )
     elapsed = time.time() - t0
 
     n_in = df.count()
-    n_out = read_table(spark, args.output).count()
+    n_out = written.get["rows"]
     summary = {
         "rows_in": n_in,
         "rows_out": n_out,

@@ -217,7 +217,7 @@ def test_dedup_single_fold_plans(spark, docs):
 
 def test_minhash_dedup_transitive_closure(spark):
     """Planted chain A~B~C with the LARGEST id in the middle: single-hop
-    keeps both local minima (A, C); transitive label propagation finds C's
+    keeps both local minima (A, C); the transitive closure finds C's
     component minimum through B and drops it."""
     words = [f"tok{i:03d}" for i in range(60)]
     a_text = " ".join(words[0:50])    # id 1
@@ -544,11 +544,10 @@ def test_exact_dedup_incremental_against_history(spark):
     assert fingerprints(nulls, "text").count() == 1  # only the non-null text
 
 
-def test_minhash_dedup_exact_closure_beats_bounded_on_deep_chain(spark):
+def test_minhash_dedup_transitive_closes_deep_chain(spark):
     """A 6-deep similarity chain (each doc overlaps its neighbors) where
-    the component minimum is >3 hops from the far end: bounded 3-round
-    propagation leaves a stray survivor; exact closure via the hybrid
-    connected-components keeps exactly one representative."""
+    the component minimum is 5 hops from the far end: the transitive
+    closure keeps exactly one representative of the chain."""
     words = [f"tok{i:03d}" for i in range(100)]
     # chain positions p0..p5; ids [10,11,12,13,14,2]: doc 10 (far end) is
     # the MINIMUM of its 3-hop neighbourhood {10,11,12,13} but not of the
@@ -570,23 +569,21 @@ def test_minhash_dedup_exact_closure_beats_bounded_on_deep_chain(spark):
     }
     assert pairs == expected_edges, pairs
 
-    exact = {
+    kept = {
         r.doc_id
         for r in minhash_dedup(
-            docs, "text", "doc_id", threshold=0.75, transitive=True, exact=True
+            docs, "text", "doc_id", threshold=0.75, transitive=True
         ).collect()
     }
-    assert exact == {2, 50}
+    assert kept == {2, 50}
 
-    bounded = {
-        r.doc_id
-        for r in minhash_dedup(
-            docs, "text", "doc_id", threshold=0.75, transitive=True, max_iters=3
-        ).collect()
-    }
-    # 3 rounds reach 3 hops: doc 10 is still its horizon's minimum and
-    # wrongly survives — the case exact=True exists for
-    assert bounded == {2, 10, 50}
+
+def test_minhash_dedup_rejects_bounded_transitive_mode(spark):
+    """``exact=False`` selected bounded label propagation, which is gone:
+    asking for it raises instead of quietly running the full closure."""
+    docs = spark.createDataFrame([(1, "a b c d e")], "doc_id long, text string")
+    with pytest.raises(ValueError, match="bounded label propagation"):
+        minhash_dedup(docs, "text", "doc_id", transitive=True, exact=False)
 
 
 @pytest.mark.parametrize(

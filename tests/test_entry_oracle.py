@@ -61,6 +61,10 @@ QUERIES = entry_mod.queries()
 
 @pytest.mark.parametrize("name", sorted(ORACLE))
 def test_query_matches_oracle(spark, duck, name):
+    _assert_matches_oracle(spark, duck, name)
+
+
+def _assert_matches_oracle(spark, duck, name):
     spark_df = QUERIES[name](spark, SF_DIR)
     spark_cols = spark_df.columns
     spark_rows = [tuple(r) for r in spark_df.collect()]
@@ -76,6 +80,23 @@ def test_query_matches_oracle(spark, duck, name):
     assert _rows_to_multiset(spark_cols, spark_rows) == _rows_to_multiset(
         duck_cols, duck_rows
     ), f"{name}: value mismatch"
+
+
+def test_dedup_cluster_sizes_star_path_matches_oracle(spark, duck, monkeypatch):
+    """The sf0.001 pair graph is far under the union-find bound, so the
+    query above never runs star contraction: force it, and the recursive-CTE
+    closure still matches."""
+    from gchq_data_quality_spark.functions import relational
+
+    monkeypatch.setattr(relational, "_SMALL_GRAPH_EDGES", 0)
+    calls: list = []
+    real_star = relational._connected_components_star
+    monkeypatch.setattr(
+        relational, "_connected_components_star",
+        lambda canon: calls.append(canon) or real_star(canon),
+    )
+    _assert_matches_oracle(spark, duck, "dedup_cluster_sizes")
+    assert len(calls) == 1
 
 
 @pytest.mark.parametrize("name", sorted(ORACLE))

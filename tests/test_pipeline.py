@@ -393,17 +393,31 @@ def _grouped_write(spark, frame, out, group):
     return stage_tasks(sc, group)
 
 
-def test_one_row_group_input_scores_in_one_task(spark, models, tmp_path, split_reads, monkeypatch):
+def test_one_row_group_input_scores_in_one_task(
+    spark, models, tmp_path, split_reads, plan_builds, monkeypatch
+):
     """Only the split holding the row group's midpoint reads rows; the
     empty splits' tasks are folded into it: one task, one data file, and
-    the rows the split-per-task plan writes, in the same order."""
+    the rows the split-per-task plan writes, in the same order. Building
+    the plan types the rule columns without the fit, so the annotate()
+    that builds it reads the footer once, like one that reuses it."""
     from gchq_data_quality_spark import pipeline as pipeline_mod
 
     df = split_reads(write_images_parquet(tmp_path / "one_rg.parquet", 300))
     assert df.rdd.getNumPartitions() >= 2
     pipe = _pipe(models)
+    probes: list = []
+    real = pipeline_mod.parquet_row_groups
+    monkeypatch.setattr(
+        pipeline_mod, "parquet_row_groups",
+        lambda frame, stop_at: probes.append(stop_at) or real(frame, stop_at),
+    )
 
-    tasks = _grouped_write(spark, pipe.annotate(df), tmp_path / "fitted", f"dq-fit-{tmp_path.name}")
+    fitted = pipe.annotate(df)
+    assert len(plan_builds) == 1 and len(probes) == 1
+    assert "Coalesce" in _plan(pipe.annotate(df))
+    assert len(plan_builds) == 1 and len(probes) == 2
+    tasks = _grouped_write(spark, fitted, tmp_path / "fitted", f"dq-fit-{tmp_path.name}")
     assert tasks == [[1]]
     files = sorted((tmp_path / "fitted").glob("part-*.parquet"))
     assert len(files) == 1

@@ -564,27 +564,38 @@ def test_job_history_toggle_on_resume_raises(spark, tmp_path, capsys):
         )
 
 
-def test_neardup_preprocessing_job_chains_into_quality_filter(spark, tmp_path, capsys):
+def test_neardup_preprocessing_job_chains_into_quality_filter(
+    spark, tmp_path, capsys, monkeypatch
+):
     """The documented two-job composition: near-dup dedup (global pair
     pass) first, its output feeds the bucket-checkpointed quality filter.
     The synthetic corpus plants exact duplicate captions, which are also
-    near-duplicates at any threshold — they must be gone after job 1."""
+    near-duplicates at any threshold — they must be gone after job 1.
+    Job 1 counts its output on its one write: it never reads it back."""
     import neardup_dedup_job
 
+    from pyspark.sql import DataFrameReader
     from pyspark.sql import functions as F
 
     from gchq_data_quality_spark.functions.text import fingerprint
 
+    reads: list = []
+    real_parquet = DataFrameReader.parquet
+    monkeypatch.setattr(
+        DataFrameReader, "parquet",
+        lambda self, *paths, **kw: reads.extend(paths) or real_parquet(self, *paths, **kw),
+    )
     nd_out = tmp_path / "nd_out"
     neardup_dedup_job.main(
         [
             "--synthetic", "300",
             "--output", str(nd_out),
             "--threshold", "0.8",
-            "--transitive", "--exact",
+            "--transitive",
             "--report-pairs",
         ]
     )
+    assert str(nd_out) not in reads
     summary = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
     assert summary["rows_in"] == 300
     assert summary["near_dups_dropped"] > 0

@@ -13,6 +13,7 @@ import random
 import pytest
 from pyspark.sql import functions as F
 
+from gchq_data_quality_spark.functions import relational as R
 from gchq_data_quality_spark.functions.relational import (
     asof_join,
     bucketed_range_join,
@@ -197,7 +198,7 @@ def test_bucketed_range_join_is_equi_join(spark):
 # ---------------------------------------------------------------------------
 
 def test_connected_components_chain_and_clique(spark):
-    # chain 1-2-3-4-5 (diameter 4 > minhash_dedup's default 3 hops),
+    # chain 1-2-3-4-5 (diameter 4),
     # clique {10,11,12}, isolated pair {20,21}
     edges = [(1, 2), (2, 3), (3, 4), (4, 5), (10, 11), (11, 12), (10, 12), (20, 21)]
     pairs = spark.createDataFrame(edges, "id_a long, id_b long")
@@ -385,14 +386,14 @@ def test_bucketed_range_join_exact_at_epoch_scale(spark):
     assert got == expected
 
 
-def test_connected_components_strict_raises_on_nonconvergence(spark):
-    chain = [(i, i + 1) for i in range(24)]  # diameter 24 > 3 rounds
+def test_connected_components_strict_raises_on_nonconvergence(spark, star_path):
+    """Non-convergence within _MAX_ROUNDS always raises: split components
+    are never returned."""
+    star_path.setattr(R, "_MAX_ROUNDS", 3)
+    chain = [(i, i + 1) for i in range(24)]  # 25 nodes need > 3 star rounds
     pairs = spark.createDataFrame(chain, "id_a long, id_b long")
-    with pytest.raises(RuntimeError, match="did not converge"):
-        connected_components(pairs, max_iters=3, small_graph_edges=0)
-    # bounded mode returns without raising (labels partially propagated)
-    labels = connected_components(pairs, max_iters=3, strict=False, small_graph_edges=0)
-    assert labels.count() == 25
+    with pytest.raises(RuntimeError, match="did not converge in 3 rounds"):
+        connected_components(pairs)
 
 
 def test_asof_right_tie_choice_is_stable(spark):
@@ -412,52 +413,51 @@ def test_asof_right_tie_choice_is_stable(spark):
 
 
 # ---------------------------------------------------------------------------
-# connected_components: star contraction (method="star")
+# connected_components: star contraction, the path above _SMALL_GRAPH_EDGES,
+# checked against the driver union-find below it
 # ---------------------------------------------------------------------------
 
-def test_star_components_match_minid_on_mixed_graph(spark):
+def _labels(pairs):
+    return {r["id"]: r["label"] for r in connected_components(pairs).collect()}
+
+
+def _union_find_and_star(pairs, monkeypatch):
+    union_find = _labels(pairs)
+    with monkeypatch.context() as m:
+        m.setattr(R, "_SMALL_GRAPH_EDGES", 0)
+        return union_find, _labels(pairs)
+
+
+@pytest.fixture
+def star_path(monkeypatch):
+    """Force the distributed path: every non-empty graph exceeds the bound."""
+    monkeypatch.setattr(R, "_SMALL_GRAPH_EDGES", 0)
+    return monkeypatch
+
+
+def test_star_components_match_union_find_on_mixed_graph(spark, monkeypatch):
     edges = [(1, 2), (2, 3), (3, 4), (4, 5), (10, 11), (11, 12), (10, 12),
              (20, 21), (30, 31), (31, 32), (30, 33), (33, 34)]
     pairs = spark.createDataFrame(edges, "id_a long, id_b long")
-    minid = {
-        r["id"]: r["label"]
-        for r in connected_components(pairs, small_graph_edges=0).collect()
-    }
-    star = {
-        r["id"]: r["label"]
-        for r in connected_components(pairs, method="star", small_graph_edges=0).collect()
-    }
-    assert star == minid
+    union_find, star = _union_find_and_star(pairs, monkeypatch)
+    assert star == union_find
 
 
-def test_star_components_converge_logarithmically_on_long_chain(spark):
-    """VERDICT r3 Next #6: a depth-63 path (diameter 63) needs ~62 min-id
-    propagation rounds but must converge for the star variant within
-    ceil(log2(64)) + c rounds — the O(log n) vs O(diameter) difference
-    that matters at 100x scale. strict=True turns the round bound into an
-    assertion: convergence inside max_iters or RuntimeError."""
+def test_star_components_converge_logarithmically_on_long_chain(spark, star_path):
+    """VERDICT r3 Next #6: a depth-63 path (diameter 63) would need ~62
+    label-propagation rounds; star contraction converges within
+    ceil(log2(64)) + 4 = 10 — the O(log n) vs O(diameter) difference that
+    matters at 100x scale. A _MAX_ROUNDS of 10 turns the round bound into
+    an assertion: convergence inside it or RuntimeError."""
+    star_path.setattr(R, "_MAX_ROUNDS", 10)
     n = 64
     chain = [(i, i + 1) for i in range(n - 1)]
     pairs = spark.createDataFrame(chain, "id_a long, id_b long")
-
-    # min-id cannot finish a diameter-63 chain in 10 rounds
-    with pytest.raises(RuntimeError, match="did not converge"):
-        connected_components(pairs, max_iters=10, small_graph_edges=0)
-
-    # star converges within ceil(log2(64)) + 4 = 10 rounds, labels exact
-    labels = {
-        r["id"]: r["label"]
-        for r in connected_components(
-            pairs, method="star", max_iters=10, small_graph_edges=0
-        ).collect()
-    }
-    assert labels == {i: 0 for i in range(n)}
+    assert _labels(pairs) == {i: 0 for i in range(n)}
 
 
-def test_star_components_random_graphs_match_union_find(spark):
-    """Differential: random sparse graphs vs a driver-side union-find."""
-    import random
-
+def test_star_components_random_graphs_match_union_find(spark, monkeypatch):
+    """Differential: random sparse graphs, star vs the driver union-find."""
     rng = random.Random(7)
     for trial in range(3):
         n = 40
@@ -465,47 +465,16 @@ def test_star_components_random_graphs_match_union_find(spark):
             (rng.randrange(n), rng.randrange(n)) for _ in range(int(n * 0.8))
         ]
         edges = [e for e in edges if e[0] != e[1]]
-        parent = list(range(n))
-
-        def find(x):
-            while parent[x] != x:
-                parent[x] = parent[parent[x]]
-                x = parent[x]
-            return x
-
-        for a, b in edges:
-            ra, rb = find(a), find(b)
-            if ra != rb:
-                parent[max(ra, rb)] = min(ra, rb)
-        expected = {}
-        for a, b in edges:
-            for v in (a, b):
-                root = find(v)
-                while parent[root] != root:
-                    root = parent[root]
-                expected[v] = root
-        # canonical label = component min
-        comp_min = {}
-        for v, r in expected.items():
-            comp_min[r] = min(comp_min.get(r, v), v)
-        expected = {v: comp_min[r] for v, r in expected.items()}
-
         pairs = spark.createDataFrame(edges, "id_a long, id_b long")
-        star = {
-            r["id"]: r["label"]
-            for r in connected_components(
-                pairs, method="star", small_graph_edges=0
-            ).collect()
-        }
-        assert star == expected, f"trial {trial}"
+        union_find, star = _union_find_and_star(pairs, monkeypatch)
+        assert star == union_find, f"trial {trial}"
+        assert len(union_find) == len({v for e in edges for v in e})
 
 
 def test_connected_components_small_graph_boundary(spark, monkeypatch):
-    """A graph with exactly ``small_graph_edges`` canonical edges takes the
-    driver union-find; one edge more takes the distributed path. Both must
-    label like the distributed path forced with ``small_graph_edges=0``."""
-    from gchq_data_quality_spark.functions import relational as R
-
+    """A graph with exactly ``_SMALL_GRAPH_EDGES`` canonical edges takes the
+    driver union-find; one edge more takes star contraction. Both must
+    label like star forced with ``_SMALL_GRAPH_EDGES = 0``."""
     rng = random.Random(3)
     edges: set = set()
     while len(edges) < 12:
@@ -516,40 +485,36 @@ def test_connected_components_small_graph_boundary(spark, monkeypatch):
     pairs = spark.createDataFrame(rows, "id_a long, id_b long")
 
     def labels(small):
-        return sorted(
-            tuple(r)
-            for r in connected_components(pairs, small_graph_edges=small).collect()
-        )
+        monkeypatch.setattr(R, "_SMALL_GRAPH_EDGES", small)
+        return sorted(tuple(r) for r in connected_components(pairs).collect())
 
     expected = labels(0)
     driver_calls: list = []
-    real = R._connected_components_driver
-
-    def spy(canon, collected):
-        driver_calls.append(len(collected))
-        return real(canon, collected)
-
-    monkeypatch.setattr(R, "_connected_components_driver", spy)
+    star_calls: list = []
+    real_driver, real_star = R._connected_components_driver, R._connected_components_star
+    monkeypatch.setattr(
+        R, "_connected_components_driver",
+        lambda canon, rows: driver_calls.append(len(rows)) or real_driver(canon, rows),
+    )
+    monkeypatch.setattr(
+        R, "_connected_components_star",
+        lambda canon: star_calls.append(canon) or real_star(canon),
+    )
     assert labels(12) == expected
-    assert driver_calls == [12]
+    assert driver_calls == [12] and not star_calls
     assert labels(11) == expected
-    assert driver_calls == [12]
+    assert driver_calls == [12] and len(star_calls) == 1
 
 
-def test_dedup_cluster_sizes_unchanged_under_star_flag(spark):
-    """The driver query's oracle-attested result must be method-invariant:
-    swapping the component algorithm changes the plan, never the labels."""
+def test_dedup_cluster_sizes_star_matches_union_find(spark, monkeypatch):
+    """The driver query's oracle-attested labels are path-invariant: star
+    contraction over the sf0.001 pair graph labels like the union-find."""
     from gchq_data_quality_spark.functions.dedup import ngram_jaccard_pairs
 
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     pairs = ngram_jaccard_pairs(docs, "text", "doc_id", threshold=0.5).localCheckpoint()
-    a = connected_components(pairs, small_graph_edges=0).orderBy("id").collect()
-    b = connected_components(
-        pairs, method="star", small_graph_edges=0
-    ).orderBy("id").collect()
-    c = connected_components(pairs).orderBy("id").collect()  # union-find path
-    assert [tuple(r) for r in a] == [tuple(r) for r in c]
-    assert [tuple(r) for r in a] == [tuple(r) for r in b]
+    union_find, star = _union_find_and_star(pairs, monkeypatch)
+    assert union_find and star == union_find
 
 
 def test_group_percentiles_approx_agrees_with_exact_at_sf001(spark):
